@@ -11,44 +11,9 @@ object Bench {
     if (id.matches("[a-z]+\\d+")) id else name
   }
 
-  /** Driver-contract core count (restored in round 16 — an early
-    * optimization commit hard-coded `local[32]`, which silently
-    * pinned the driver's lower-core-count scaling runs to 32 cores
-    * and made the per-core scaling measurement meaningless). The
-    * master AND the shuffle-partition count both derive from
-    * `SPARK_GRAFT_CPUS` so the execution layout scales with the
-    * granted cores rather than being tuned for one box (guide §2:
-    * scale-adaptive partitioning; AQE coalescing still merges small
-    * post-shuffle partitions on top). Default 32 = this sandbox's
-    * core count, keeping round-over-round bench artifacts
-    * comparable. */
-  private[graft] def cpusFromEnv(get: String => Option[String]): Int = {
-    val raw = get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
-    raw.flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      .getOrElse(32)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = cpusFromEnv(sys.env.get)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (round 16): parallelismFirst=true (the
-      // default) coalesces post-shuffle partitions down to
-      // minPartitionSize=1m, which put CPU-heavy mid-size stages
-      // (e.g. d02's capped-collect pair fan-out reading a 4.3 MB
-      // exchange) on 4 of 32 cores. 256k keeps such stages wide; at
-      // production shuffle sizes the advisory target dominates and
-      // this floor is irrelevant. Parameterised for non-local runs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
 
     // untimed warmup: JIT/codegen/scheduler/FS init would otherwise be
     // billed to whichever query runs first — including first-use

@@ -19,30 +19,7 @@ object BenchQuick {
     val names = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES",
       sys.error("SPARK_GRAFT_BENCH_QUERIES is required"))
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    // master + shuffle partitions derive from SPARK_GRAFT_CPUS exactly
-    // like the full Bench (r16 ADVICE: a hardcoded local[32] here ran a
-    // different execution layout than the sweep on non-32-core grants,
-    // so the regression re-measures this tool exists for were not
-    // apples-to-apples)
-    val cpus = Bench.cpusFromEnv(sys.env.get)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-quick")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (round 16): parallelismFirst=true (the
-      // default) coalesces post-shuffle partitions down to
-      // minPartitionSize=1m, which put CPU-heavy mid-size stages
-      // (e.g. d02's capped-collect pair fan-out reading a 4.3 MB
-      // exchange) on 4 of 32 cores. 256k keeps such stages wide; at
-      // production shuffle sizes the advisory target dominates and
-      // this floor is irrelevant. Parameterised for non-local runs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench-quick")
 
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     val qdefs = names.map(n => byName.getOrElse(n,

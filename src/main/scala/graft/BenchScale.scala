@@ -86,25 +86,11 @@ object BenchScale {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_SCALE.json")
-    // partitions sized to the decade (SPARK_GRAFT_SCALE_PARTITIONS,
-    // default 32): at 100× a 32-partition shuffle leaves individual
-    // aggregation partitions too large for the per-task share of a
-    // single-JVM executor's page pool (c01's LSH candidate distinct
-    // OOM'd at 60 g heap) — exactly the partitions-follow-data rule a
-    // real deployment applies, surfaced as a knob instead of a
-    // constant. Base and scaled sides run at the same setting inside
-    // one sweep, so the ratio stays apples-to-apples.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-bench-scale")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // partitions follow the decade through SPARK_GRAFT_CPUS (with
+    // SPARK_MASTER pinning the threads): at 100x a 32-partition shuffle
+    // left c01's LSH candidate distinct too large for a task's share
+    // of the page pool (OOM at 60 g heap)
+    val spark = GraftSession("graft-bench-scale")
 
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     // SPARK_GRAFT_SCALE_QUERIES overrides the SweepSet (comma-separated)

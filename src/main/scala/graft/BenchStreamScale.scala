@@ -30,14 +30,7 @@ object BenchStreamScale {
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }.toSeq
     val maxFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_MAXFILES", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_STREAM_N", "3").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-bench-stream-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench-stream-scale")
     import org.apache.spark.sql.functions._
 
     def runOnce(label: String, dir: String, rep: Int): (Double, Long, Long, Long) = {

@@ -19,16 +19,15 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   /** events.parquet has shipped `ts` two ways across testdata
-    * generations: TIMESTAMP(NANOS) (which Spark 4 refuses by default
-    * — read nanos as long and truncate to µs, matching DuckDB's
-    * internal µs timestamps) and plain TIMESTAMP(MICROS) (which
+    * generations: TIMESTAMP(NANOS) (which Spark 4 refuses by default;
+    * [[GraftSession]] reads it as long, truncated here to µs, matching
+    * DuckDB's internal µs timestamps) and plain TIMESTAMP(MICROS) (which
     * Spark reads natively as TIMESTAMP_NTZ). Adapt to whichever is
     * on disk and normalize to the session-TZ TimestampType every
     * downstream operator and oracle was validated against. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -101,14 +101,18 @@ object AegJsonCodec {
   def serialize(row: AegRow): String = {
     val sb = new java.lang.StringBuilder
     sb.append(row.key).append('\t')
-    sb.append("{\"").append(esc(row.key)).append("\":{\"deletedAt\":")
-      .append(row.deletedAt).append(",\"columns\":[")
+    sb.append("{\"")
+    Compaction.appendEscaped(sb, row.key)
+    sb.append("\":{\"deletedAt\":").append(row.deletedAt).append(",\"columns\":[")
     var first = true
     row.columns.foreach { c =>
       if (!first) sb.append(',')
       first = false
-      sb.append("[\"").append(esc(c.name)).append("\",\"").append(esc(c.value))
-        .append("\",").append(c.ts)
+      sb.append("[\"")
+      Compaction.appendEscaped(sb, c.name)
+      sb.append("\",\"")
+      Compaction.appendEscaped(sb, c.value)
+      sb.append("\",").append(c.ts)
       c.status.foreach { st =>
         sb.append(",\"").append(st).append('"')
         st match {
@@ -121,22 +125,6 @@ object AegJsonCodec {
       sb.append(']')
     }
     sb.append("]}}")
-    sb.toString
-  }
-
-  private def esc(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\b' => sb.append("\\b")
-      case '\t' => sb.append("\\t")
-      case '\n' => sb.append("\\n")
-      case '\f' => sb.append("\\f")
-      case '\r' => sb.append("\\r")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
     sb.toString
   }
 

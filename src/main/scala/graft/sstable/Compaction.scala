@@ -78,7 +78,13 @@ object Compaction {
             if (totalSize > maxRowSize) {
               truncated = true // F3: stop accumulating, keep draining for deletedAt
             } else if (a.kind == SSTableFormat.KindRangeTombstone) {
-              openTombstones += ((a.name, a.rtMax, a.ts.get))
+              val mfda = a.ts.get
+              // an older cell named exactly at the lower bound sorts
+              // BEFORE the tombstone (name, then ts): it is still pending
+              if (curr != null && mfda >= curr.ts &&
+                  nameType.compare(a.name, curr.name) <= 0 &&
+                  nameType.compare(curr.name, a.rtMax) <= 0) curr = null
+              openTombstones += ((a.name, a.rtMax, mfda))
             } else {
               // expire tombstones that end before this column's name
               var i = 0
@@ -200,7 +206,7 @@ object Compaction {
     catch { case _: Exception => CassType.hex(bytes) }
 
   /** Jackson-compatible minimal JSON string escaping. */
-  private def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
+  private[sstable] def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
     var i = 0
     while (i < s.length) {
       val ch = s.charAt(i)

@@ -52,12 +52,14 @@ object SSTableVersion {
   /** Sniff the format version from an sstable filename — handles both
     * legacy `ks-cf-<ver>-<gen>-Data.db` and 2.2+ `<ver>-<gen>-big-Data.db`
     * names; unknown names fall back to Current (reference:
-    * `input/readers/SSTableRecordReader.java:99-104`). */
-  def fromFilename(fileName: String): SSTableVersion = {
-    val parts = fileName.split('-')
-    parts.find(p => p.length == 2 && p.forall(c => c >= 'a' && c <= 'z'))
-      .map(SSTableVersion(_)).getOrElse(Current)
-  }
+    * `input/readers/SSTableRecordReader.java:99-104`). The version is
+    * the two-letter token followed by the numeric generation, so a
+    * two-letter keyspace or table name is not mistaken for it. */
+  def fromFilename(fileName: String): SSTableVersion =
+    fileName.split('-').sliding(2).collectFirst {
+      case Array(v, gen) if v.length == 2 && v.forall(c => c >= 'a' && c <= 'z') &&
+          gen.nonEmpty && gen.forall(_.isDigit) => SSTableVersion(v)
+    }.getOrElse(Current)
 }
 
 /** One cell/tombstone/row-marker from one source file — the engine's

@@ -117,14 +117,12 @@ object SSTableSource {
     matched.toSeq
   }
 
+  /** `_temporary`, `_SUCCESS`, `.crc` and the like. Judges only the
+    * path's own name: callers test each entry below the listed root,
+    * so the root's ancestors never hide the input. */
   def isHidden(p: Path): Boolean = {
-    var cur = p
-    while (cur != null) {
-      val n = cur.getName
-      if (n.startsWith("_") || n.startsWith(".")) return true
-      cur = cur.getParent
-    }
-    false
+    val n = p.getName
+    n.startsWith("_") || n.startsWith(".")
   }
 
   /** `batch_?id=NNN` sibling-directory pattern (the reference
@@ -220,70 +218,53 @@ object SSTableSource {
       forcedVersion: Option[String]): Seq[SSTablePartition] = {
     val file = st.getPath
     val version = forcedVersion.getOrElse(SSTableVersion.fromFilename(file.getName).name)
-    val parts = ArrayBuffer[SSTablePartition]()
-    compressionPath(fs, file) match {
-      case Some(ci) =>
-        // S4 + the reference's wishlist improvement (README.md:40-41):
-        // with an Index.db we can split COMPRESSED sstables too —
-        // offsets are in uncompressed space; the reader seeks to the
-        // containing chunk and skips in. Otherwise: one partition.
-        val meta = {
-          val in = fs.open(ci)
-          try CompressionMeta.read(in, st.getLen)
-          finally in.close()
-        }
-        // locality in COMPRESSED (on-disk) space: map uncompressed
-        // offsets to the containing chunk's file offset
-        def cHosts(uStart: Long, uEnd: Long): Array[String] = {
-          val nChunks = meta.chunkOffsets.length
-          val sIdx = math.min((uStart / meta.chunkLength).toInt, nChunks - 1)
-          val eIdx = math.min((uEnd / meta.chunkLength).toInt, nChunks - 1)
-          val cStart = meta.chunkOffsets(sIdx)
-          val cEnd = if (eIdx >= nChunks - 1) st.getLen else meta.chunkOffsets(eIdx + 1)
-          hostsFor(fs, st, cStart, cEnd - cStart)
-        }
-        val idx = new Path(file.getParent, file.getName.replace("-Data.db", "-Index.db"))
-        if (meta.dataLength <= blocksize || !fs.exists(idx)) {
-          parts += SSTablePartition(file.toString, 0L, meta.dataLength, Some(ci.toString),
-            version, cHosts(0L, meta.dataLength))
-        } else {
-          val in = fs.open(idx)
-          val offsets = try IndexScanner.dataOffsets(in).toArray finally in.close()
-          var splitStart = 0L
-          offsets.foreach { off =>
-            if (off - splitStart >= blocksize) {
-              parts += SSTablePartition(file.toString, splitStart, off, Some(ci.toString),
-                version, cHosts(splitStart, off))
-              splitStart = off
-            }
+    // logical (uncompressed) length, CompressionInfo path, and the
+    // block hosts of a logical byte range
+    val (len, ci, hosts): (Long, Option[String], (Long, Long) => Array[String]) =
+      compressionPath(fs, file) match {
+        case Some(ci) =>
+          // S4 + the reference's wishlist improvement (README.md:40-41):
+          // with an Index.db we can split COMPRESSED sstables too —
+          // offsets are in uncompressed space; the reader seeks to the
+          // containing chunk and skips in. Otherwise: one partition.
+          val meta = {
+            val in = fs.open(ci)
+            try CompressionMeta.read(in, st.getLen)
+            finally in.close()
           }
-          if (splitStart < meta.dataLength)
-            parts += SSTablePartition(file.toString, splitStart, meta.dataLength, Some(ci.toString),
-              version, cHosts(splitStart, meta.dataLength))
-        }
-      case None =>
-        // S3: row-boundary splits from the Index.db sidecar
-        val idx = new Path(file.getParent, file.getName.replace("-Data.db", "-Index.db"))
-        val len = st.getLen
-        if (len <= blocksize || !fs.exists(idx)) {
-          parts += SSTablePartition(file.toString, 0L, len, None, version,
-            hostsFor(fs, st, 0L, len))
-        } else {
-          val in = fs.open(idx)
-          val offsets = try IndexScanner.dataOffsets(in).toArray finally in.close()
-          var splitStart = 0L
-          offsets.foreach { off =>
-            if (off - splitStart >= blocksize) {
-              parts += SSTablePartition(file.toString, splitStart, off, None, version,
-                hostsFor(fs, st, splitStart, off - splitStart))
-              splitStart = off
-            }
+          // locality in COMPRESSED (on-disk) space: map uncompressed
+          // offsets to the containing chunk's file offset
+          def cHosts(uStart: Long, uEnd: Long): Array[String] = {
+            val nChunks = meta.chunkOffsets.length
+            val sIdx = math.min((uStart / meta.chunkLength).toInt, nChunks - 1)
+            val eIdx = math.min((uEnd / meta.chunkLength).toInt, nChunks - 1)
+            val cStart = meta.chunkOffsets(sIdx)
+            val cEnd = if (eIdx >= nChunks - 1) st.getLen else meta.chunkOffsets(eIdx + 1)
+            hostsFor(fs, st, cStart, cEnd - cStart)
           }
-          if (splitStart < len) parts += SSTablePartition(file.toString, splitStart, len, None,
-            version, hostsFor(fs, st, splitStart, len - splitStart))
+          (meta.dataLength, Some(ci.toString), cHosts _)
+        case None =>
+          (st.getLen, None, (s: Long, e: Long) => hostsFor(fs, st, s, e - s))
+      }
+    def part(start: Long, end: Long) =
+      SSTablePartition(file.toString, start, end, ci, version, hosts(start, end))
+    // S3: row-boundary splits from the Index.db sidecar
+    val idx = new Path(file.getParent, file.getName.replace("-Data.db", "-Index.db"))
+    if (len <= blocksize || !fs.exists(idx)) Seq(part(0L, len))
+    else {
+      val in = fs.open(idx)
+      val offsets = try IndexScanner.dataOffsets(in).toArray finally in.close()
+      val parts = ArrayBuffer[SSTablePartition]()
+      var splitStart = 0L
+      offsets.foreach { off =>
+        if (off - splitStart >= blocksize) {
+          parts += part(splitStart, off)
+          splitStart = off
         }
+      }
+      if (splitStart < len) parts += part(splitStart, len)
+      parts.toSeq
     }
-    parts.toSeq
   }
 
   /** S6: greedy bin-packing of small splits (default on; the

@@ -82,7 +82,6 @@ object EventStreams {
     * TimestampType). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // the file streaming source requires a directory: stream the parent
     // dir with a glob filter for the events table

@@ -22,25 +22,7 @@ object PlanDump {
     val tag = args(1)
     val pat = args(2).r
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.Bench.cpusFromEnv(sys.env.get)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (round 16): parallelismFirst=true (the
-      // default) coalesces post-shuffle partitions down to
-      // minPartitionSize=1m, which put CPU-heavy mid-size stages
-      // (e.g. d02's capped-collect pair fan-out reading a 4.3 MB
-      // exchange) on 4 of 32 cores. 256k keeps such stages wide; at
-      // production shuffle sizes the advisory target dominates and
-      // this floor is irrelevant. Parameterised for non-local runs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-plandump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     graft.SparkEntry.registry
       .filter(q => pat.findFirstIn(q.name).isDefined)

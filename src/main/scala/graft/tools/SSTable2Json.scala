@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.GraftSSTable
 
 /** CLI analog of the reference's `scripts/sstable2json` wrapper
@@ -15,7 +14,8 @@ import graft.GraftSSTable
   * `schemafile:`/`columntype:`/`keytype:` configure the marshal types
   * (the reference's `-cql`/`aegisthus.columntype`/`keytype` options):
   * the comparator drives the distributed sort+merge and the rendered
-  * aeg-JSON names. `compress` writes chunked-LZ4 sstables. */
+  * aeg-JSON names. `compress` writes chunked-LZ4 sstables. The session
+  * is [[graft.GraftSession]]'s: `SPARK_MASTER` and `SPARK_GRAFT_CPUS`. */
 object SSTable2Json {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
@@ -44,13 +44,7 @@ object SSTable2Json {
       case _ => "LZ4Compressor"
     }).getOrElse("LZ4Compressor")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("sstable2json")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("sstable2json")
     try {
       val typeOpts = Seq(
         opt("schemafile").map(p => "cql" ->

@@ -43,14 +43,7 @@ object ScaleUp {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1 && factor <= 1000, s"factor out of range: $factor")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-scaleup")
     scale(spark, src, out, factor)
     spark.stop()
   }

@@ -45,14 +45,7 @@ object ZipfSlice {
     val Array(out, nDocsS) = args
     val nDocs = nDocsS.toLong
     require(nDocs >= 100 && nDocs <= 10000000L, s"nDocs out of range: $nDocs")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-zipf-slice")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-zipf-slice")
     synthesize(spark, nDocs).write.mode(SaveMode.Overwrite)
       .parquet(s"$out/documents.parquet")
     synthesizeEmbeddings(spark, (nDocs * 2) / 5).write.mode(SaveMode.Overwrite)

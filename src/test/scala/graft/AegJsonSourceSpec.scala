@@ -12,11 +12,7 @@ class AegJsonSourceSpec extends AnyFunSuite {
   private val goldenDir =
     "/root/reference/aegisthus-hadoop/src/test/resources/testdata/2.0.10/randomtable/aeg_json_output"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("reads the reference golden output; byte-range splits agree with whole-file read") {
     import spark.implicits._

@@ -11,11 +11,7 @@ import graft.sstable.{AtomRec, SSTableFormat}
   * job-level commit publishes nothing until every task succeeds. */
 class AegJsonWriteSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def mkRows(n: Int) = {
     import spark.implicits._

@@ -16,12 +16,7 @@ import graft.operators.{Baskets, Dedup, Events, Graph, Incremental, Storage}
   */
 class AnalyticsDifferentialSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private var seed = 0x5DEECE66DL
   private def nxt(): Long = {
@@ -414,7 +409,6 @@ class AnalyticsDifferentialSpec extends AnyFunSuite {
 
   test("segmentDupStats + segmentDedupSavings: differential fuzz vs in-memory segmenting (short docs, within-doc repeats)") {
     import spark.implicits._
-    graft.functions.CassFunctions.registerAll(spark) // in-memory frames skip Tables.load
     val vocab = Vector("aa", "bb", "cc", "dd")
     (1 to 3).foreach { round =>
       val w = 4

@@ -10,12 +10,7 @@ import graft.sstable.{AvroSink, CellOut, CompactedRow, SSTableFormat}
   * through Avro container files, committed speculation-safe. */
 class AvroSinkSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def conf = new org.apache.hadoop.conf.Configuration()
 

@@ -10,11 +10,7 @@ import graft.operators.Baskets
   * and partition independence. */
 class BasketsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def run(rows: Seq[(Long, Long)], minPairs: Long, parts: Int = 4) = {
     import spark.implicits._

@@ -14,15 +14,7 @@ import graft.operators.Bpe
   */
 class BpeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def train(docs: Seq[String], steps: Int): Seq[(Long, String, String, Long)] = {
     import spark.implicits._

@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are set at runtime and tables/locations are cleaned before use. */
 class BucketingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("bucketed tables join without a shuffle exchange") {
     val d = "/root/testdata/sf0.001"

@@ -15,15 +15,7 @@ import graft.operators.{Dedup, Similarity, Storage}
 class CacheHygieneSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def checkHygiene(name: String)(op: => DataFrame): Unit = {
     val baseCached = spark.sharedState.cacheManager.isEmpty

@@ -16,15 +16,7 @@ import graft.operators.Similarity
   * truncating. */
 class CentroidExprsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def nrm(v: Array[Double]): Double = {
     var a = 0.0; var i = 0

@@ -10,11 +10,7 @@ import graft.operators.Cluster
   * in-memory union-find. */
 class ClusterSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def components(edges: Seq[(Long, Long)], parts: Int = 4): Map[Long, Long] = {
     import spark.implicits._

@@ -11,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast-anti-join + collect three-pass shape. */
 class CollectCappedSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("groups at the cap survive sorted; groups past the cap are null") {
     import spark.implicits._

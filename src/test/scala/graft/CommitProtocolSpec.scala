@@ -13,11 +13,7 @@ import graft.sstable.TaskCommit
   * final paths untouched, and the job must clean its temp tree. */
 class CommitProtocolSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def conf = new org.apache.hadoop.conf.Configuration()
 

@@ -17,11 +17,7 @@ import graft.sstable._
   * only). */
 class CompactionDifferentialSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def randomAtoms(seed: Long, n: Int): Seq[AtomRec] = {
     val rnd = new scala.util.Random(seed)
@@ -73,5 +69,25 @@ class CompactionDifferentialSpec extends AnyFunSuite {
       val out = render(GraftSSTable.compact(scrambled, numPartitions = 5).collect().toSeq)
       assert(out == base, s"seed=$seed: input order changed the answer")
     }
+  }
+
+  test("range tombstone kills an older cell named at its lower bound (shuffle-sorted input)") {
+    import spark.implicits._
+    // the (key, name, ts) sort puts k1's b@10 BEFORE the tombstone
+    // b@50, so the merge sees the cell first and must drop it when the
+    // tombstone arrives; k2's newer b@60 after it survives
+    def cell(key: String, name: String, ts: Long) =
+      AtomRec(key.getBytes, "src", Long.MinValue, SSTableFormat.KindColumn,
+        name.getBytes, s"$key.$name@$ts".getBytes, Some(ts), None, None, None, null)
+    def rt(key: String, min: String, max: String, mfda: Long) =
+      AtomRec(key.getBytes, "src", Long.MinValue, SSTableFormat.KindRangeTombstone,
+        min.getBytes, null, Some(mfda), None, None, None, max.getBytes)
+    val atoms = Seq(
+      cell("k1", "a", 10), cell("k1", "b", 10), rt("k1", "b", "c", 50),
+      cell("k1", "c", 50), cell("k1", "d", 10),
+      cell("k2", "b", 10), cell("k2", "b", 20), rt("k2", "b", "b", 50), cell("k2", "b", 60))
+    val rows = GraftSSTable.compact(spark.createDataset(atoms).toDF()).collect()
+    val kept = rows.flatMap(_.columns).map(c => new String(c.value)).toSet
+    assert(kept == Set("k1.a@10", "k1.d@10", "k2.b@60"))
   }
 }

@@ -9,11 +9,7 @@ import graft.sstable._
   * the engine expressions (X1/X4/X8). */
 class CompactionOptionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def cell(name: String, value: String, ts: Long) =
     CellOut(SSTableFormat.KindColumn, name.getBytes, value.getBytes, ts, None, None, None)
@@ -55,7 +51,6 @@ class CompactionOptionsSpec extends AnyFunSuite {
   }
 
   test("engine expressions: cass_render, composite_split, hex casters") {
-    graft.functions.CassFunctions.registerAll(spark)
     import spark.implicits._
     val df = Seq(("cafe".getBytes, "00010000000941")).toDF("b", "h")
     val r = df.selectExpr(

@@ -13,11 +13,7 @@ import graft.sstable._
   */
 class CompressionFuzzSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   /** Build a Cassandra-style compressed blob + CompressionInfo bytes
     * for the given payload: chunks of `chunkLen` uncompressed bytes,

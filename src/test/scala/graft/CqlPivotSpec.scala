@@ -11,11 +11,7 @@ import graft.sstable.{CellOut, CompactedRow, SSTableFormat}
 class CqlPivotSpec extends AnyFunSuite {
   private val testRoot = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("CQL parse: keys, clustering, static, collections") {
     val t = CqlTable.parse(

@@ -12,15 +12,7 @@ import graft.operators.{Decontaminate, Dedup}
   * clean-docs-never-join plan shape. */
 class DecontaminateSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private val P = 1000000007L
 

@@ -8,17 +8,7 @@ import graft.operators.Dedup
   * pairs as the full count-join (prefix filtering is exact). */
 class DedupVariantsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // explicit: the suite must pass standalone, not only after a suite
-    // that happens to register the graft_* functions first
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("prefix-filtered jaccard == full candidate jaccard") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -11,15 +11,7 @@ import graft.operators.Dialogue
   * fuzz against an in-memory reference. */
 class DialogueSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def turnsDf(rows: Seq[(Long, Long, String, String)]) = {
     import spark.implicits._

@@ -11,11 +11,7 @@ import graft.sstable._
   * not raw hex. */
 class DiffSnapshotsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def writeFixture(file: java.io.File, rows: Seq[CompactedRow]): Unit =
     SparkEntry.writeFixture(file, rows)

@@ -9,12 +9,7 @@ import graft.streaming.EventStreams
 class EventStreamsSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("stateStorePartitions: sizing rule clamps and ceils") {
     import EventStreams.stateStorePartitions

@@ -9,12 +9,7 @@ import graft.operators.Events
   * and share arithmetic — all on hand-built fixtures. */
 class EventsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def ev(rows: (Long, String, String)*) = {
     import spark.implicits._

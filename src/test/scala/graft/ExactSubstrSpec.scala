@@ -11,15 +11,7 @@ import graft.operators.{Dedup, TextOps}
   * fuzz against an in-memory reference. */
 class ExactSubstrSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def df(docs: Seq[(Long, String)]) = {
     import spark.implicits._

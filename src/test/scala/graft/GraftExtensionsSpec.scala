@@ -20,12 +20,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-test",
+      _.config("spark.sql.extensions", classOf[GraftExtensions].getName))
     try {
       val h = spark.sql("SELECT graft_polyhash('abc', 31) AS h").head().getLong(0)
       assert(h == PolyHash.hash("abc", 31))

@@ -10,11 +10,7 @@ import graft.operators.{Graph, Storage}
   * graph, guards, and storage hygiene. */
 class GraphSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def run(edges: Seq[(Long, Long, Long)], iters: Int,
       parts: Int = 4): Map[Long, Long] = {

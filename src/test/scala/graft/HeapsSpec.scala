@@ -8,15 +8,7 @@ import graft.operators.{Dedup, TextOps}
   * [[Dedup.privacyGate]] threshold semantics. */
 class HeapsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def docs(rows: Seq[(Long, String, String)]) = {
     import spark.implicits._

@@ -9,12 +9,7 @@ import graft.operators.Incremental
   * differential-fuzzed over random slicings, plus guards. */
 class IncrementalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def events(rows: (String, String, Double)*) = {
     import spark.implicits._

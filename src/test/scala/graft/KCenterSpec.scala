@@ -8,15 +8,7 @@ import graft.operators.{Dedup, Similarity}
   * geometry, and [[Dedup.rareWindowAudit]] k-anonymity counting. */
 class KCenterSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def emb(rows: Seq[(Long, Seq[Float])]) = {
     import spark.implicits._

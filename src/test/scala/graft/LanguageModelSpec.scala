@@ -9,18 +9,7 @@ import graft.operators.LanguageModel
   * degenerate docs, and plan shape. */
 class LanguageModelSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // register the graft_* native expressions explicitly — relying on
-    // an earlier suite having registered them on the shared session
-    // made this spec order-dependent (failed under isolated testOnly)
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private val P = 1000000007L
 

@@ -11,11 +11,7 @@ import graft.operators.{MediaCodec, Multimodal}
 class MultimodalSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("PPM round trip: encode∘decode is identity on a hand-built fixture") {
     val rgb = Array.tabulate(3 * 2 * 3)(i => (i * 37 % 256).toByte)

@@ -9,11 +9,7 @@ import graft.operators.Packing
   * always opens bin 0) and shuffle/partition invariance. */
 class PackingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def pack(rows: Seq[(String, Long, Long)], budget: Long) = {
     import spark.implicits._

@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanAuditSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   /** final (post-AQE) physical plan string. */
   private def finalPlan(df: DataFrame): String = {

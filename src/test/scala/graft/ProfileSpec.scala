@@ -9,11 +9,7 @@ import graft.operators.Profile
   * ignoring nulls, all-null and single-value columns. */
 class ProfileSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("profile: nulls, distinct, min/max on a hand fixture") {
     import spark.implicits._

@@ -9,15 +9,7 @@ import graft.operators.QualityModel
   * on the heuristic label, and the empty-doc edge. */
 class QualityModelSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private val stopEn = Set("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 

@@ -16,12 +16,8 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession("graft-test",
+      _.config("spark.sql.extensions", classOf[GraftExtensions].getName))
   }
 
   private def fixture() = {

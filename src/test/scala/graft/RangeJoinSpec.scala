@@ -13,14 +13,7 @@ import graft.operators.Joins
   * nested-loop scan. */
 class RangeJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def fixture() = {
     import spark.implicits._

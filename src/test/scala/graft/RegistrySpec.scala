@@ -27,7 +27,7 @@ class RegistrySpec extends AnyFunSuite {
     // per-core scaling; a hard-coded local[32] (the round-2..15
     // regression fixed in round 16) silently pinned that run to 32
     // cores. Exercise the REAL derivation the session builder uses.
-    def env(m: Map[String, String]) = Bench.cpusFromEnv(m.get)
+    def env(m: Map[String, String]) = GraftSession.cpusFromEnv(m.get)
     assert(env(Map("SPARK_GRAFT_CPUS" -> "8")) == 8)
     assert(env(Map("SPARK_GRAFT_CPUS" -> " 16 ")) == 16)
     assert(env(Map.empty) == 32, "default stays the sandbox's 32 cores")

@@ -11,11 +11,7 @@ import graft.operators.Retrieval
   * audits. */
 class RetrievalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private val corpus = Seq(
     1L -> "the quick brown fox jumps over the lazy dog",

@@ -11,15 +11,7 @@ import scala.util.Random
   * operator must hold on ANY corpus, not a pinned fixture. */
 class Round15FuzzSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def randomCorpus(rng: Random, nDocs: Int, vocab: Int) = {
     import spark.implicits._

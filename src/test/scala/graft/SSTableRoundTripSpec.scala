@@ -12,11 +12,7 @@ import graft.sstable.CassType
 class SSTableRoundTripSpec extends AnyFunSuite {
   private val testRoot = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def goldenLines(caseDir: String): Seq[String] = {
     val src = scala.io.Source.fromFile(s"$testRoot/$caseDir/aeg_json_output/aeg-00000")

@@ -14,15 +14,7 @@ import graft.operators.{Dedup, Storage}
   */
 class SaturationSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def satMetrics(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.queryExecution.observedMetrics.toSeq.collect {

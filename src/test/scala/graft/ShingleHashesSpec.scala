@@ -11,18 +11,13 @@ import graft.operators.TextOps
   * adversarial edge strings. */
 class ShingleHashesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def sqlForm(textCol: String, n: Int): String =
     s"array_distinct(transform(${TextOps.shingles(s"${TextOps.tokens(textCol)}", n)}, " +
       s"x -> ${TextOps.strHash60("x")}))"
 
   test("native == composed SQL form on the documents corpus (n=3 and n=5)") {
-    graft.functions.CassFunctions.registerAll(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     Seq(3, 5).foreach { n =>
       val diff = docs.selectExpr("doc_id",
@@ -33,7 +28,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("token hashes (non-distinct, ordered) == transform(tokens, strHash60)") {
-    graft.functions.CassFunctions.registerAll(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val diff = docs.selectExpr("doc_id",
         "graft_token_hashes(text) AS a",
@@ -43,7 +37,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("positional shingle hashes (non-distinct, ordered) == transform(shingles, strHash60)") {
-    graft.functions.CassFunctions.registerAll(spark)
     import spark.implicits._
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
@@ -61,7 +54,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("edge strings: empty, short, separators, case, non-ascii") {
-    graft.functions.CassFunctions.registerAll(spark)
     import spark.implicits._
     val edges = Seq("", "a", "a b", "a b c", "  A--B\t\tc  ", "a  b   c d",
       "123 abc 456", "über café naïve test words here", "a.b,c;d:e f")

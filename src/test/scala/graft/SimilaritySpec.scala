@@ -12,15 +12,7 @@ import graft.operators.{Similarity, Storage}
 class SimilaritySpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("kmeansUpdate is partition-count independent (order-insensitive integer sums)") {
     val emb = Tables.embeddings(spark, sfDir)

@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * regression surfaces before the driver's sf0.01 gate. */
 class SketchBoundsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def assertAllBoundsHold(sfDir: String): Unit = {
     val rows = queries.Relational2.q37.run(spark, sfDir).collect()

@@ -13,18 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * lambda form's null shape. */
 class SketchDotCodegenSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def registered(): SparkSession = {
-    graft.functions.CassFunctions.registerAll(spark); spark
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("graft_dot_long == aggregate(zip_with(...)) fold on the int8 corpus") {
-    val s = registered()
+    val s = spark
     val q = graft.operators.Similarity
       .quantizeInt8(Tables.embeddings(s, "/root/testdata/sf0.001"))
       .select("vec_id", "q")
@@ -38,7 +30,7 @@ class SketchDotCodegenSpec extends AnyFunSuite {
   }
 
   test("graft_dot == aggregate(zip_with(...)) IEEE fold on the double corpus") {
-    val s = registered()
+    val s = spark
     val v = graft.operators.Similarity
       .prepared(Tables.embeddings(s, "/root/testdata/sf0.001"))
       .select("vec_id", "v")
@@ -52,7 +44,7 @@ class SketchDotCodegenSpec extends AnyFunSuite {
   }
 
   test("length mismatch / null element / null array: both dots mirror the zip_with form") {
-    val s = registered()
+    val s = spark
     // (name, native, lambda-reference) triples evaluated in one row
     val r = s.sql(
       """SELECT
@@ -78,7 +70,7 @@ class SketchDotCodegenSpec extends AnyFunSuite {
   }
 
   test("graft_rp_sketch == transform(sequence(...), aggregate(...)) on the int8 corpus") {
-    val s = registered()
+    val s = spark
     val q = graft.operators.Similarity
       .quantizeInt8(Tables.embeddings(s, "/root/testdata/sf0.001"))
       .select("vec_id", "q")
@@ -92,7 +84,7 @@ class SketchDotCodegenSpec extends AnyFunSuite {
   }
 
   test("graft_rp_sketch null array / null element yields dims NULL coordinates (the lambda shape)") {
-    val s = registered()
+    val s = spark
     val r = s.sql(
       """SELECT
         |  graft_rp_sketch(cast(null as array<int>), 4) AS nullarr,
@@ -112,7 +104,7 @@ class SketchDotCodegenSpec extends AnyFunSuite {
   }
 
   test("the plans carry no CodegenFallback for the dot/sketch natives") {
-    val s = registered()
+    val s = spark
     // codegen-clean input (no higher-order lambdas in the same
     // Project — those are interpreted regardless and would mask the
     // natives' own codegen): the whole projection must land inside a

@@ -10,11 +10,7 @@ import graft.sstable._
   * member of a combined partition must lose only its own split. */
 class SplitCombineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def writeFixture(dir: java.io.File, n: Int): Unit = {
     (1 to n).foreach { i =>
@@ -160,6 +156,36 @@ class SplitCombineSpec extends AnyFunSuite {
       assert(elapsedMs < 1500,
         f"planning 12 files took $elapsedMs%.0f ms — sidecar probes are not parallel")
     } finally SlowFs.latencyMs = 0L
+  }
+
+  test("fromFilename takes the two-letter token before the numeric generation") {
+    assert(SSTableVersion.fromFilename("ab-users-ic-1-Data.db").name == "ic")
+    assert(SSTableVersion.fromFilename("ks-cf-jb-3-Data.db").name == "jb")
+    assert(SSTableVersion.fromFilename("la-1-big-Data.db").name == "la")
+  }
+
+  test("input under _/. ancestors is read; _temporary and dot-files inside it are skipped") {
+    val tmp = java.nio.file.Files.createTempDirectory("hidden").toFile
+    val snap = new java.io.File(tmp, "_x/.y/snap"); snap.mkdirs()
+    writeFixture(snap, 3)
+    val staged = new java.io.File(snap, "_temporary"); staged.mkdirs()
+    writeFixture(staged, 5)
+    java.nio.file.Files.copy(new java.io.File(snap, "ks-cf-jb-1-Data.db").toPath,
+      new java.io.File(snap, ".ks-cf-jb-9-Data.db").toPath)
+    val atoms = GraftSSTable.readAtoms(spark, snap.toString)
+    assert(atoms.select("key").collect().map(r => new String(r.getAs[Array[Byte]](0))).sorted
+      .toSeq == Seq("key001", "key002", "key003"))
+
+    val aeg = new java.io.File(tmp, "_x/.y/aeg"); aeg.mkdirs()
+    def writeLines(name: String, keys: Seq[Int]): Unit =
+      java.nio.file.Files.write(new java.io.File(aeg, name).toPath,
+        keys.map(i => Compaction.toAegJson(CompactedRow(f"key$i%03d".getBytes, Long.MinValue,
+          Seq(CellOut(SSTableFormat.KindColumn, "c".getBytes, "v".getBytes, 1L,
+            None, None, None))))).mkString("", "\n", "\n").getBytes)
+    writeLines("aeg-00000", Seq(1, 2))
+    writeLines(".aeg-00000.crc", Seq(8))
+    writeLines("_partial", Seq(9))
+    assert(GraftSSTable.readAegJson(spark, aeg.toString).count() == 2)
   }
 }
 

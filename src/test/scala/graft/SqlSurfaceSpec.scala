@@ -12,15 +12,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
   private val fixtures = s"${TestUtil.fixturesRoot}/2.0.10/randomtable/input"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   test("CREATE TEMPORARY VIEW ... USING sstable + engine expressions, SQL only") {
     spark.sql(s"""CREATE OR REPLACE TEMPORARY VIEW atoms

@@ -13,15 +13,7 @@ import graft.operators.{Bpe, Similarity, Storage}
 class StorageChaosSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   /** run `op`, require it to throw, and assert storage is back to the
     * pre-call baseline: nothing new in the CacheManager, nothing new

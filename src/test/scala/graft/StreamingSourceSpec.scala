@@ -13,11 +13,7 @@ import graft.sstable._
   * LWW state carried ACROSS batches. */
 class StreamingSourceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def writeFile(dir: java.io.File, gen: Int,
       rows: Seq[(String, Seq[(String, String, Long)])]): Unit = {

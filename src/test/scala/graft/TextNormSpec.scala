@@ -10,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the source. */
 class TextNormSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def nfc(input: String): String = {
     import spark.implicits._

@@ -11,15 +11,7 @@ import graft.operators.TextOps
   */
 class TextOpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.CassFunctions.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def div(docs: Seq[(Long, String)]): Map[Long, (Long, Long, Long, Long, Long)] = {
     import spark.implicits._

@@ -25,11 +25,7 @@ import graft.sstable._
   */
 class TypedComparatorSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestUtil.session()
 
   private def longB(v: Long): Array[Byte] = ByteBuffer.allocate(8).putLong(v).array()
   private def intB(v: Int): Array[Byte] = ByteBuffer.allocate(4).putInt(v).array()
