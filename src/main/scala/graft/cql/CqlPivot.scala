@@ -1,10 +1,10 @@
 package graft.cql
 
-import java.nio.ByteBuffer
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
-import graft.sstable.{CellOut, CompactedRow}
+import graft.sstable.{CellOut, CompactedRow, SSTableWriter}
+import graft.sstable.CassType.CompositeType
 
 /** Relational pivot of compacted CQL3 rows (SURVEY §3.2): one output
   * record per (partition key, clustering prefix) group — partition-key
@@ -25,26 +25,6 @@ object CqlPivot {
     * `CassSSTableReducer.java:89-96`). */
   @volatile var rowsTooBig: Option[org.apache.spark.util.LongAccumulator] = None
 
-  /** Composite cell-name components: [u16 len][bytes][u8 eoc]...;
-    * a 2.0 static prefix starts with the 0xFFFF marker. */
-  private[cql] def splitComposite(name: Array[Byte]): (Boolean, Array[Array[Byte]]) = {
-    val bb = ByteBuffer.wrap(name)
-    var isStatic = false
-    if (bb.remaining() >= 2) {
-      val mark = bb.getShort(0) & 0xffff
-      if (mark == 0xffff) { isStatic = true; bb.position(2) }
-    }
-    val out = Array.newBuilder[Array[Byte]]
-    while (bb.remaining() > 0) {
-      val len = bb.getShort & 0xffff
-      val comp = new Array[Byte](len)
-      bb.get(comp)
-      if (bb.remaining() > 0) bb.get() // eoc
-      out += comp
-    }
-    (isStatic, out.result())
-  }
-
   /** @param maxRowBytes wide-row valve (the F3 pattern, reference
     *   `CassSSTableReducer.java:89-96` / `aegisthus.maxcolsize`): a
     *   partition whose cells exceed this byte budget is DROPPED and
@@ -52,25 +32,20 @@ object CqlPivot {
     *   per-group maps — the typed relational schema cannot carry F4's
     *   error-marker string, so the valve uses F3's drop-and-count
     *   semantics; assert the accumulator driver-side like
-    *   `assertCorruptFilesBelow`. Size accounting matches the
-    *   compaction/JSON valves ([[graft.sstable.Compaction.sizeOf]]). */
+    *   `assertCorruptFilesBelow`. Size accounting is the on-disk cell
+    *   size ([[graft.sstable.SSTableWriter.cellSize]]), as in the JSON
+    *   valve. */
   def pivot(rows: Dataset[CompactedRow], cql: String, maxRowBytes: Long = Long.MaxValue): DataFrame = {
     val table = CqlTable.parse(cql)
-    val schema = table.sparkSchema
-    val spark = rows.sparkSession
-    val t = table
-    val cap = maxRowBytes
-    val acc = spark.sparkContext.longAccumulator("cqlPivot.rowsTooBig")
+    val acc = rows.sparkSession.sparkContext.longAccumulator("cqlPivot.rowsTooBig")
     rowsTooBig = Some(acc)
-
-    val pivoted = rows.flatMap { row =>
-      if (cap != Long.MaxValue &&
-          row.columns.iterator.map(graft.sstable.Compaction.sizeOf).sum > cap) {
+    rows.flatMap { row =>
+      if (maxRowBytes != Long.MaxValue &&
+          row.columns.iterator.map(SSTableWriter.cellSize).sum > maxRowBytes) {
         acc.add(1L)
         Iterator.empty
-      } else pivotRow(row, t)
-    }(Encoders.row(schema))
-    spark.createDataFrame(pivoted.rdd, schema)
+      } else pivotRow(row, table)
+    }(Encoders.row(table.sparkSchema))
   }
 
   /** Pivot one compacted row into relational records. */
@@ -81,7 +56,7 @@ object CqlPivot {
       if (table.partitionKeys.size == 1)
         Seq(table.partitionKeys.head.tpe.compose(row.key))
       else {
-        val (_, comps) = splitComposite(row.key)
+        val comps = CompositeType.split(row.key)
         table.partitionKeys.zip(comps).map { case (c, b) => c.tpe.compose(b) }
       }
 
@@ -91,8 +66,8 @@ object CqlPivot {
     val staticCells = mutable.LinkedHashMap[String, mutable.ArrayBuffer[(Array[Byte], CellOut)]]()
 
     row.columns.foreach { cell =>
-      val (isStatic, comps) = splitComposite(cell.name)
-      if (isStatic) {
+      val comps = CompositeType.split(cell.name)
+      if (CompositeType.isStatic(cell.name)) {
         if (comps.length >= 1) {
           val colId = new String(comps(nCk min (comps.length - 1)), "UTF-8")
           if (colId.nonEmpty) {

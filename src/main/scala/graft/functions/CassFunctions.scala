@@ -94,7 +94,7 @@ case class CompositeSplit(child: Expression)
     else TypeCheckResult.TypeCheckFailure("composite_split expects BINARY")
 
   override protected def nullSafeEval(bytes: Any): Any = {
-    val comps = CassType.CompositeType(Seq.empty).split(bytes.asInstanceOf[Array[Byte]])
+    val comps = CassType.CompositeType.split(bytes.asInstanceOf[Array[Byte]])
     new GenericArrayData(comps.asInstanceOf[Array[Any]])
   }
 

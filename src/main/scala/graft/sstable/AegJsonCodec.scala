@@ -100,32 +100,81 @@ object AegJsonCodec {
     * reference AegisthusSerializerTest). */
   def serialize(row: AegRow): String = {
     val sb = new java.lang.StringBuilder
-    sb.append(row.key).append('\t')
-    sb.append("{\"")
-    Compaction.appendEscaped(sb, row.key)
-    sb.append("\":{\"deletedAt\":").append(row.deletedAt).append(",\"columns\":[")
+    appendHead(sb, row.key, None, row.deletedAt)
     var first = true
     row.columns.foreach { c =>
       if (!first) sb.append(',')
       first = false
-      sb.append("[\"")
-      Compaction.appendEscaped(sb, c.name)
-      sb.append("\",\"")
-      Compaction.appendEscaped(sb, c.value)
-      sb.append("\",").append(c.ts)
-      c.status.foreach { st =>
-        sb.append(",\"").append(st).append('"')
-        st match {
-          case "e" => sb.append(',').append(c.ttl.getOrElse(0L)).append(',')
-            .append(c.localDeletionTime.getOrElse(0L))
-          case "c" => sb.append(',').append(c.tsOfLastDelete.getOrElse(0L))
-          case _ =>
-        }
-      }
-      sb.append(']')
+      appendCell(sb, c.name, c.value, c.ts, c.status.orNull, c.ttl.getOrElse(0L),
+        c.localDeletionTime.getOrElse(0L), c.tsOfLastDelete.getOrElse(0L))
     }
-    sb.append("]}}")
+    appendTail(sb)
     sb.toString
+  }
+
+  // The line layout (X6, byte-compatible with
+  // `output/JsonOutputFormat.java:108-182`):
+  // `key\t[source\t]{"key":{"deletedAt":D,"columns":[cell,...]}}`.
+  // Every aeg-JSON writer renders through these appenders.
+
+  /** `key\t[source\t]{"key":{"deletedAt":D,"columns":[` */
+  def appendHead(sb: java.lang.StringBuilder, key: String, traceSource: Option[String],
+      deletedAt: Long): Unit = {
+    sb.append(key).append('\t')
+    traceSource.foreach(src => sb.append(src).append('\t'))
+    sb.append("{\"")
+    appendEscaped(sb, key)
+    sb.append("\":{\"deletedAt\":").append(deletedAt).append(",\"columns\":[")
+  }
+
+  /** One `["name","value",ts]` cell with its status suffix: `,"d"`,
+    * `,"e",ttl,localDeletionTime` or `,"c",tsOfLastDelete`; `status`
+    * is null for a live cell. */
+  def appendCell(sb: java.lang.StringBuilder, name: String, value: String, ts: Long,
+      status: String, ttl: Long, localDeletionTime: Long, tsOfLastDelete: Long): Unit = {
+    sb.append("[\"")
+    appendEscaped(sb, name)
+    sb.append("\",\"")
+    appendEscaped(sb, value)
+    sb.append("\",").append(ts)
+    if (status != null) {
+      sb.append(",\"").append(status).append('"')
+      status match {
+        case "e" => sb.append(',').append(ttl).append(',').append(localDeletionTime)
+        case "c" => sb.append(',').append(tsOfLastDelete)
+        case _ =>
+      }
+    }
+    sb.append(']')
+  }
+
+  /** F4's oversize-row marker, written in place of the cells. */
+  def appendError(sb: java.lang.StringBuilder, message: String): Unit = {
+    sb.append("\"error\",\"")
+    appendEscaped(sb, message)
+    sb.append("\",0")
+  }
+
+  def appendTail(sb: java.lang.StringBuilder): Unit = { sb.append("]}}"); () }
+
+  /** Jackson-compatible minimal JSON string escaping. */
+  private def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
+    var i = 0
+    while (i < s.length) {
+      val ch = s.charAt(i)
+      ch match {
+        case '"' => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\b' => sb.append("\\b")
+        case '\t' => sb.append("\\t")
+        case '\n' => sb.append("\\n")
+        case '\f' => sb.append("\\f")
+        case '\r' => sb.append("\\r")
+        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+        case c => sb.append(c)
+      }
+      i += 1
+    }
   }
 
   /** Minimal JSON pull-parser for this fixed shape (tolerates escaped

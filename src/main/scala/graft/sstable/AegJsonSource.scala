@@ -1,10 +1,9 @@
 package graft.sstable
 
 import java.util
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.Text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -32,7 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Files split by newline-aligned byte ranges (`blocksize`, default
   * 64 MiB) — the standard seek(start-1)/discard-first-line rule, so
-  * splits scale with file size like any text scan.
+  * splits scale with file size like any text scan. The source also
+  * streams ([[FileSetStream]]): chained pipelines can watch one job's
+  * compacted snapshots and load them downstream as they land.
   *
   * Options: `clean` (default true — drop tombstoned/shadowed cells and
   * rows left empty, reference `AegisthusLoader.java:75-90`),
@@ -126,112 +127,34 @@ final case class AegJsonPartition(path: String, start: Long, end: Long,
 }
 
 final class AegJsonScan(options: Map[String, String], required: StructType)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+    extends FileSetScan(options, required) {
   override def description(): String = "graft-aegjson"
 
-  /** file-byte size stats (see [[SSTableScan.estimateStatistics]]). */
-  override def estimateStatistics(): Statistics = {
-    val total = plannedPartitions.map { case p: AegJsonPartition => p.end - p.start }.sum
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(total)
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = plannedPartitions
-
-  private lazy val plannedPartitions: Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
-    val paths = SSTableSource.optionPaths(options, "aegjson")
-    val parts = ArrayBuffer[InputPartition]()
-    paths.foreach { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      val files = SSTableSource.expandGlob(fs, root).flatMap { st =>
+  /** the non-hidden, non-empty files directly under each root. */
+  override protected def listFiles(): Seq[(FileSystem, FileStatus)] =
+    listRoots("aegjson") { (fs, st) =>
+      val files =
         if (st.isDirectory)
           fs.listStatus(st.getPath).toSeq.filter(s => s.isFile && !SSTableSource.isHidden(s.getPath))
         else Seq(st)
-      }
-      files.filter(_.getLen > 0).foreach { st =>
-        var off = 0L
-        while (off < st.getLen) {
-          val end = math.min(off + blocksize, st.getLen)
-          parts += AegJsonPartition(st.getPath.toString, off, end,
-            SSTableSource.hostsFor(fs, st, off, end - off))
-          off = end
-        }
-      }
+      files.filter(_.getLen > 0)
     }
-    parts.toArray
-  }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AegJsonReaderFactory(required, options.getOrElse("clean", "true").toBoolean,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
-
-  /** Streaming face: micro-batches over an append-only aeg-JSON output
-    * dir — chained pipelines can watch one job's compacted snapshots
-    * and load them downstream as they land. Same (modTime, path)
-    * high-watermark contract as the sstable stream. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new AegJsonMicroBatchStream(options, required)
-}
-
-final class AegJsonMicroBatchStream(options: Map[String, String], required: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private case class FilesOffset(n: Int) extends Offset {
-    override def json(): String = s"""{"n":$n}"""
-  }
-
-  private val hconf = new org.apache.spark.util.SerializableConfiguration(
-    SparkSession.active.sessionState.newHadoopConf())
-
-  private def listSorted(): Seq[org.apache.hadoop.fs.FileStatus] =
-    SSTableSource.optionPaths(options, "aegjson").flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(hconf.value)
-      SSTableSource.expandGlob(fs, root).flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(s => s.isFile && !SSTableSource.isHidden(s.getPath))
-        else Seq(st)
-      }.filter(_.getLen > 0)
-    }.sortBy(st => (st.getModificationTime, st.getPath.toString))
-
-  override def initialOffset(): Offset = FilesOffset(0)
-  override def latestOffset(): Offset = FilesOffset(listSorted().size)
-  override def deserializeOffset(json: String): Offset =
-    FilesOffset(raw"""\{"n":(\d+)\}""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(s"bad aegjson offset: $json")))
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[FilesOffset].n
-    val e = end.asInstanceOf[FilesOffset].n
-    val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
-    listSorted().slice(s, e).flatMap { st =>
-      var off = 0L
-      val out = ArrayBuffer[InputPartition]()
-      while (off < st.getLen) {
-        val to = math.min(off + blocksize, st.getLen)
-        out += AegJsonPartition(st.getPath.toString, off, to, Array.empty)
-        off = to
+  /** `blocksize` byte ranges per file; the reader aligns them to lines. */
+  override protected def plan(files: Seq[(FileSystem, FileStatus)]): Array[InputPartition] =
+    files.flatMap { case (fs, st) =>
+      (0L until st.getLen by blocksize).map { off =>
+        val end = math.min(off + blocksize, st.getLen)
+        AegJsonPartition(st.getPath.toString, off, end, SSTableSource.hostsFor(fs, st, off, end - off))
       }
-      out
-    }.toArray
+    }.toArray[InputPartition]
+
+  override protected def partitionBytes(p: InputPartition): Long = p match {
+    case a: AegJsonPartition => a.end - a.start
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new AegJsonReaderFactory(required, options.getOrElse("clean", "true").toBoolean, hconf)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 final class AegJsonReaderFactory(required: StructType, clean: Boolean,

@@ -94,40 +94,19 @@ object AvroSink {
     * partition, via the speculation-safe commit protocol. */
   def write(df: DataFrame, outDir: String, dataset: String = "export",
       numFiles: Int = -1): Unit = {
-    val spark = df.sparkSession
     val schema = df.schema
     val avroJson = avroSchema(schema, dataset).toString
-    val ds = dataset
-    val out = outDir
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val jobId = java.util.UUID.randomUUID().toString
     val repart = if (numFiles > 0) df.repartition(numFiles) else df
-    // previous-run cleanup (the sinks' overwrite semantics)
-    locally {
-      val p = new org.apache.hadoop.fs.Path(out)
-      val fs = p.getFileSystem(hconf.value)
-      if (fs.exists(p))
-        fs.listStatus(p).filter { st =>
-          val n = st.getPath.getName
-          n.startsWith(s"$ds-") && n.endsWith(".avro")
-        }.foreach(st => fs.delete(st.getPath, false))
-    }
-    repart.rdd.mapPartitionsWithIndex { (idx, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        TaskCommit.withTaskAttemptDir(hconf.value, out, jobId) { (fs, dir) =>
-          val sch = new Schema.Parser().parse(avroJson)
-          val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](sch))
-          val os = fs.create(new org.apache.hadoop.fs.Path(dir, f"$ds-$idx%05d.avro"), true)
-          w.create(sch, os)
-          it.foreach(r => w.append(record(r, schema, sch)))
-          w.close()
-        }
-        Iterator.single(idx)
+    val names = (java.util.regex.Pattern.quote(s"$dataset-") + raw"\d{5,}\.avro").r
+    TaskCommit.write(repart, outDir, names) { (fs, dir, idx, it) =>
+      if (it.hasNext) {
+        val sch = new Schema.Parser().parse(avroJson)
+        val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](sch))
+        w.create(sch, fs.create(new org.apache.hadoop.fs.Path(dir, f"$dataset-$idx%05d.avro"), true))
+        it.foreach(r => w.append(record(r, schema, sch)))
+        w.close()
       }
-    }.count()
-    TaskCommit.cleanupJob(hconf.value, out, jobId)
+    }
   }
 
   /** Read container files back as generic records (test/verification

@@ -290,20 +290,32 @@ object CassType {
     * the reference renders composite names via the configured
     * comparator; with BytesType that is plain hex, which the goldens
     * use, so Composite rendering is only needed for explicit
-    * composite-typed configs). */
+    * composite-typed configs). A 2.0 static column's name starts with
+    * the 0xFFFF marker and has empty clustering components. As in
+    * Cassandra's `AbstractCompositeType`, the empty name sorts first,
+    * then static names, then all others; an empty component sorts
+    * before any other value of its type (`AbstractType`'s rule, kept
+    * by `ReversedType` too). */
   final case class CompositeType(components: Seq[CassType]) extends CassType {
     override def getString(bytes: Array[Byte]): String = {
-      val parts = split(bytes).zipWithIndex.map { case (c, i) =>
+      val parts = CompositeType.split(bytes).zipWithIndex.map { case (c, i) =>
         components.lift(i).getOrElse(BytesType).getString(c)
       }
       parts.mkString("(", ", ", ")")
     }
     override def compare(a: Array[Byte], b: Array[Byte]): Int = {
-      val as = split(a); val bs = split(b)
+      if (a.isEmpty || b.isEmpty) return a.length - b.length
+      val sa = CompositeType.isStatic(a)
+      if (sa != CompositeType.isStatic(b)) return if (sa) -1 else 1
+      val as = CompositeType.split(a); val bs = CompositeType.split(b)
       val n = math.min(as.length, bs.length)
       var i = 0
       while (i < n) {
-        val cmp = components.lift(i).getOrElse(BytesType).compare(as(i), bs(i))
+        val x = as(i)
+        val y = bs(i)
+        val cmp =
+          if (x.isEmpty || y.isEmpty) x.length - y.length
+          else components.lift(i).getOrElse(BytesType).compare(x, y)
         if (cmp != 0) return cmp
         i += 1
       }
@@ -311,19 +323,23 @@ object CassType {
     }
     override def typeName: String =
       s"CompositeType(${components.map(_.typeName).mkString(",")})"
+    /** empty name -> empty key; otherwise a 0x00 (static) or 0x01
+      * prefix, then the escaped-and-terminated component keys. */
     override def sortKey(bytes: Array[Byte]): Array[Byte] = {
-      val parts = split(bytes)
+      if (bytes.isEmpty) return bytes
+      val parts = CompositeType.split(bytes)
       val encoded = new Array[Array[Byte]](parts.length)
-      var total = 0
+      var total = 1
       var i = 0
       while (i < parts.length) {
         val t = components.lift(i).getOrElse(BytesType)
-        encoded(i) = escapeTerminate(t.sortKey(parts(i)))
+        encoded(i) = escapeTerminate(if (parts(i).isEmpty) parts(i) else t.sortKey(parts(i)))
         total += encoded(i).length
         i += 1
       }
       val out = new Array[Byte](total)
-      var off = 0
+      out(0) = if (CompositeType.isStatic(bytes)) 0 else 1
+      var off = 1
       i = 0
       while (i < encoded.length) {
         System.arraycopy(encoded(i), 0, out, off, encoded(i).length)
@@ -332,10 +348,21 @@ object CassType {
       }
       out
     }
-    /** split composite-encoded bytes into component byte arrays (X4). */
+  }
+
+  object CompositeType {
+    private val StaticMarker = 0xffff
+
+    /** a 2.0 static column's name: the composite opens with 0xFFFF. */
+    def isStatic(bytes: Array[Byte]): Boolean =
+      bytes.length >= 2 && (((bytes(0) & 0xff) << 8) | (bytes(1) & 0xff)) == StaticMarker
+
+    /** split composite-encoded bytes into component byte arrays (X4),
+      * skipping a static marker. */
     def split(bytes: Array[Byte]): Array[Array[Byte]] = {
       val out = Array.newBuilder[Array[Byte]]
       val bb = ByteBuffer.wrap(bytes)
+      if (isStatic(bytes)) bb.position(2)
       while (bb.remaining() > 0) {
         val len = bb.getShort & 0xffff
         val comp = new Array[Byte](len)

@@ -147,25 +147,18 @@ object Compaction {
       sortColumnsByName: Boolean = false,
       legacyFormatting: Boolean = false): String = {
     val sb = new java.lang.StringBuilder(64 + row.columns.size * 48)
-    val keyStr = renderSafe(keyType, row.key)
-    sb.append(keyStr).append('\t')
-    traceSource.foreach { src => sb.append(src).append('\t') }
+    AegJsonCodec.appendHead(sb, renderSafe(keyType, row.key), traceSource, row.deletedAt)
     def renderName(c: CellOut): String = {
       val n = renderSafe(nameType, c.name)
       if (legacyFormatting) legacyColumnNameFormat(n) else n
     }
-    sb.append("{\"")
-    appendEscaped(sb, keyStr)
-    sb.append("\":{\"deletedAt\":").append(row.deletedAt).append(",\"columns\":[")
     var cols = if (sortColumnsByName) row.columns.sortBy(renderName) else row.columns
     var needComma = false
     if (maxColSize >= 0) {
-      val size = cols.map(sizeOf).sum
+      val size = cols.map(SSTableWriter.cellSize).sum
       if (size > maxColSize) {
         // F4: oversize row replaced by an error marker triple
-        sb.append("\"error\",\"")
-        appendEscaped(sb, f"row too large: $size%,d bytes - limit $maxColSize%,d bytes")
-        sb.append("\",0")
+        AegJsonCodec.appendError(sb, f"row too large: $size%,d bytes - limit $maxColSize%,d bytes")
         cols = Seq.empty
         needComma = true
       }
@@ -173,30 +166,17 @@ object Compaction {
     cols.foreach { c =>
       if (needComma) sb.append(',')
       needComma = true
-      sb.append("[\"")
-      appendEscaped(sb, renderName(c))
-      sb.append("\",\"")
-      appendEscaped(sb, renderSafe(valueType, c.value))
-      sb.append("\",").append(c.ts)
-      c.kind match {
-        case SSTableFormat.KindDeleted => sb.append(",\"d\"")
-        case SSTableFormat.KindExpiring =>
-          sb.append(",\"e\",").append(c.ttl.getOrElse(0)).append(',')
-            .append(c.localDeletionTime.getOrElse(0))
-        case SSTableFormat.KindCounter =>
-          sb.append(",\"c\",").append(c.tsOfLastDelete.getOrElse(0L))
-        case _ =>
+      val status = c.kind match {
+        case SSTableFormat.KindDeleted => "d"
+        case SSTableFormat.KindExpiring => "e"
+        case SSTableFormat.KindCounter => "c"
+        case _ => null
       }
-      sb.append(']')
+      AegJsonCodec.appendCell(sb, renderName(c), renderSafe(valueType, c.value), c.ts, status,
+        c.ttl.getOrElse(0).toLong, c.localDeletionTime.getOrElse(0).toLong, c.tsOfLastDelete.getOrElse(0L))
     }
-    sb.append("]}}")
+    AegJsonCodec.appendTail(sb)
     sb.toString
-  }
-
-  private[graft] def sizeOf(c: CellOut): Long = c.kind match {
-    case SSTableFormat.KindCounter => 2L + c.name.length + 1 + 8 + 8 + 4 + c.value.length
-    case SSTableFormat.KindExpiring => 2L + c.name.length + 1 + 4 + 4 + 8 + 4 + c.value.length
-    case _ => 2L + c.name.length + 1 + 8 + 4 + c.value.length
   }
 
   /** render with MarshalException-style fallback to hex (reference
@@ -204,24 +184,4 @@ object Compaction {
   private def renderSafe(t: CassType, bytes: Array[Byte]): String =
     try t.getString(bytes)
     catch { case _: Exception => CassType.hex(bytes) }
-
-  /** Jackson-compatible minimal JSON string escaping. */
-  private[sstable] def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      ch match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\b' => sb.append("\\b")
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\f' => sb.append("\\f")
-        case '\r' => sb.append("\\r")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-  }
 }

@@ -30,7 +30,10 @@ import org.apache.spark.util.LongAccumulator
   *    logical end is the uncompressed length (S4/S5);
   *  - per-partition corrupt-file absorb with an accumulator +
   *    driver-side threshold assert (A3) when `skipCorrupt=true`;
-  *  - column pruning pushdown (F6).
+  *  - column pruning pushdown (F6);
+  *  - micro-batch streaming over an append-only snapshot dir
+  *    ([[FileSetStream]]), the incremental-ingest surface the reference
+  *    removed with its commit-log readers (`README.md:37-39`).
   *
   * Options: `blocksize` (long, default 64 MiB), `skipCorrupt`
   * (boolean, default false), `version` (force format version),
@@ -108,14 +111,6 @@ object SSTableSource {
         .map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
       .orElse(options.get("path").map(Seq(_)))
       .getOrElse(throw new IllegalArgumentException(s"$sourceName source requires a path"))
-
-  /** Glob-expand a possibly-wildcarded path (plain existing paths pass
-    * through as themselves). */
-  def expandGlob(fs: FileSystem, p: Path): Seq[FileStatus] = {
-    val matched = fs.globStatus(p)
-    require(matched != null && matched.nonEmpty, s"Path not found: $p")
-    matched.toSeq
-  }
 
   /** `_temporary`, `_SUCCESS`, `.crc` and the like. Judges only the
     * path's own name: callers test each entry below the listed root,
@@ -200,13 +195,15 @@ object SSTableSource {
   private[sstable] def hostsFor(fs: FileSystem, st: FileStatus, off: Long, len: Long): Array[String] = {
     try {
       val blocks = fs.getFileBlockLocations(st, off, math.max(len, 1L))
-      if (blocks == null) Array.empty
-      else {
-        val byHost = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        blocks.foreach(b => b.getHosts.foreach(h => byHost(h) = byHost.getOrElse(h, 0L) + b.getLength))
-        byHost.toSeq.sortBy { case (h, b) => (-b, h) }.take(3).map(_._1).toArray
-      }
+      if (blocks == null) Array.empty else topHosts(blocks.map(b => (b.getHosts, b.getLength)))
     } catch { case _: Exception => Array.empty }
+  }
+
+  /** the three hosts that cover the most bytes, ties by name. */
+  private[sstable] def topHosts(covered: Array[(Array[String], Long)]): Array[String] = {
+    val byHost = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    covered.foreach { case (hosts, n) => hosts.foreach(h => byHost(h) = byHost.getOrElse(h, 0L) + n) }
+    byHost.toSeq.sortBy { case (h, b) => (-b, h) }.take(3).map(_._1).toArray
   }
 
   /** Row-boundary split planning for one Data.db (S3/S4; runs on the
@@ -227,11 +224,7 @@ object SSTableSource {
           // with an Index.db we can split COMPRESSED sstables too —
           // offsets are in uncompressed space; the reader seeks to the
           // containing chunk and skips in. Otherwise: one partition.
-          val meta = {
-            val in = fs.open(ci)
-            try CompressionMeta.read(in, st.getLen)
-            finally in.close()
-          }
+          val meta = CompressionMeta.read(fs.open(ci), st.getLen)
           // locality in COMPRESSED (on-disk) space: map uncompressed
           // offsets to the containing chunk's file offset
           def cHosts(uStart: Long, uEnd: Long): Array[String] = {
@@ -372,111 +365,64 @@ final case class SSTablePartition(
   * more gracefully when members span hosts). */
 final case class SSTableCombinedPartition(members: Array[SSTablePartition])
     extends InputPartition {
-  override def preferredLocations(): Array[String] = {
-    val byHost = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    members.foreach(m => m.hosts.foreach(h => byHost(h) = byHost.getOrElse(h, 0L) + m.size))
-    byHost.toSeq.sortBy { case (h, b) => (-b, h) }.take(3).map(_._1).toArray
-  }
+  override def preferredLocations(): Array[String] =
+    SSTableSource.topHosts(members.map(m => (m.hosts, m.size)))
 }
 
 final class SSTableScan(options: Map[String, String], required: StructType,
     pushedSourceFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+    extends FileSetScan(options, required) {
   override def description(): String = "graft-sstable"
 
-  /** Size stats from the planned splits (uncompressed bytes), so
-    * Catalyst can auto-broadcast a small compacted table into a join
-    * instead of defaulting to `Long.MaxValue` → sort-merge. Planning
-    * is cached so stats + execution pay the sidecar reads once. */
-  override def estimateStatistics(): Statistics = {
-    val total = plannedPartitions.map {
-      case p: SSTablePartition => p.size
-      case c: SSTableCombinedPartition => c.members.map(_.size).sum
-    }.sum
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(total)
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-    }
-  }
+  private val skipCorrupt = options.getOrElse("skipcorrupt", "false").toBoolean
+  private val latestBatchOnly = options.getOrElse("latestbatchonly", "false").toBoolean
 
-  /** conjunction of the pushed `source` predicates against a file path. */
-  private def fileAdmitted(path: String): Boolean = {
-    import org.apache.spark.sql.sources._
-    pushedSourceFilters.forall {
-      case EqualTo("source", v: String) => path == v
-      case StringStartsWith("source", prefix) => path.startsWith(prefix)
-      case In("source", vs) => vs.exists(_ == path)
-      case _ => true
-    }
-  }
-
-  /** Streaming face (`spark.readStream.format("sstable").load(dir)`):
-    * micro-batches over an APPEND-ONLY snapshot directory — the
-    * incremental-ingest surface the reference removed with its
-    * commit-log readers (`README.md:37-39`). Feeds
-    * [[graft.streaming.StreamingCompaction.compactIncremental]]. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SSTableMicroBatchStream(options, required)
-
-  override def planInputPartitions(): Array[InputPartition] = plannedPartitions
-
-  private lazy val plannedPartitions: Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
-    val paths = SSTableSource.optionPaths(options, "sstable")
-
-    // driver listing stays serial (one recursive walk per root); the
-    // per-file sidecar probes + reads — high-latency on object stores —
-    // fan out on a bounded pool (the reference's 20 planner threads,
-    // `AegisthusInputFormat.java:205-233`)
-    val files: Seq[(FileSystem, FileStatus)] = paths.flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(conf)
-      SSTableSource.expandGlob(fs, root)
-        .flatMap(st => SSTableSource.listDataFiles(fs, st.getPath,
-          options.getOrElse("latestbatchonly", "false").toBoolean))
-        .filter(st => fileAdmitted(st.getPath.toString))
-        .map(st => (fs, st))
-    }
-    val version = options.get("version")
-    val parts: Seq[SSTablePartition] =
-      SSTableSource.planFilesParallel(files, blocksize, version)
+  /** this scan's corrupt-file counter, published for the driver-side
+    * threshold assert. */
+  private lazy val corruptAcc: LongAccumulator = {
     val acc = SparkSession.active.sparkContext.longAccumulator("sstable.corruptFiles")
     SSTableSource.corruptFiles = Some(acc)
-    accForFactory = acc
-
-    SSTableSource.combineSplits(parts, options)
+    acc
   }
 
-  private var accForFactory: LongAccumulator = _
+  override protected def listFiles(): Seq[(FileSystem, FileStatus)] =
+    listRoots("sstable")((fs, st) => SSTableSource.listDataFiles(fs, st.getPath, latestBatchOnly))
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // guard against a factory being built without (or before) a
-    // planInputPartitions call on this Scan instance — the corrupt
-    // counter must always exist for the driver-side threshold assert
-    if (accForFactory == null) {
-      val acc = SparkSession.active.sparkContext.longAccumulator("sstable.corruptFiles")
-      SSTableSource.corruptFiles = Some(acc)
-      accForFactory = acc
+  /** the listing pruned by the pushed `source` predicates. */
+  override protected def batchFiles(): Seq[(FileSystem, FileStatus)] = {
+    import org.apache.spark.sql.sources._
+    listFiles().filter { case (_, st) =>
+      val path = st.getPath.toString
+      pushedSourceFilters.forall {
+        case EqualTo("source", v: String) => path == v
+        case StringStartsWith("source", prefix) => path.startsWith(prefix)
+        case In("source", vs) => vs.exists(_ == path)
+        case _ => true
+      }
     }
-    // note: options arrive via CaseInsensitiveStringMap with lowercased keys
-    new SSTableReaderFactory(required,
-      options.getOrElse("skipcorrupt", "false").toBoolean, accForFactory,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
   }
+
+  // driver listing stays serial (one recursive walk per root); the
+  // per-file sidecar probes + reads — high-latency on object stores —
+  // fan out on a bounded pool (the reference's 20 planner threads,
+  // `AegisthusInputFormat.java:205-233`)
+  override protected def plan(files: Seq[(FileSystem, FileStatus)]): Array[InputPartition] =
+    SSTableSource.combineSplits(
+      SSTableSource.planFilesParallel(files, blocksize, options.get("version")), options)
+
+  override protected def partitionBytes(p: InputPartition): Long = p match {
+    case p: SSTablePartition => p.size
+    case c: SSTableCombinedPartition => c.members.map(_.size).sum
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new SSTableReaderFactory(required, skipCorrupt, corruptAcc, hconf)
 }
 
 final class SSTableReaderFactory(
     required: StructType,
     skipCorrupt: Boolean,
     corruptAcc: LongAccumulator,
-    // the session's Hadoop conf must travel to tasks: a bare
-    // `new Configuration()` there would drop spark.hadoop.* settings
-    // (credentials, endpoints) and break any non-local filesystem
     hadoopConf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
 
@@ -498,12 +444,7 @@ final class SSTableReaderFactory(
         val raw = fs.open(path)
         val stream: java.io.InputStream = p.compressionInfoPath match {
           case Some(ci) =>
-            val ciPath = new Path(ci)
-            val meta = {
-              val in = fs.open(ciPath)
-              try CompressionMeta.read(in, fs.getFileStatus(path).getLen)
-              finally in.close()
-            }
+            val meta = CompressionMeta.read(fs.open(new Path(ci)), fs.getFileStatus(path).getLen)
             // chunk-aligned positioning: seek to the chunk containing
             // p.start, then skip into it on the decompressed side
             val startChunk = (p.start / meta.chunkLength).toInt
@@ -572,63 +513,4 @@ final class SSTableReaderFactory(
       override def close(): Unit = if (scanner != null) scanner.close()
     }
   }
-}
-
-/** Micro-batch streaming over an APPEND-ONLY sstable snapshot dir:
-  * the offset is a high-watermark COUNT over the discovered Data.db
-  * files ordered by (modification time, path) — new sstables are
-  * flushed strictly later than existing ones and files are immutable
-  * once written (Cassandra's own contract), so the ordered prefix of
-  * length N is stable across listings and `[start, end)` addresses a
-  * deterministic batch of new files. Each micro-batch plans its files
-  * through the same row-boundary splitter, bin-packing,
-  * corrupt-absorb and locality machinery as the batch scan. */
-final class SSTableMicroBatchStream(options: Map[String, String], required: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private case class FilesOffset(n: Int) extends Offset {
-    override def json(): String = s"""{"n":$n}"""
-  }
-
-  private val hconf = new org.apache.spark.util.SerializableConfiguration(
-    SparkSession.active.sessionState.newHadoopConf())
-  private val corruptAcc: LongAccumulator = {
-    val acc = SparkSession.active.sparkContext.longAccumulator("sstable.corruptFiles")
-    SSTableSource.corruptFiles = Some(acc)
-    acc
-  }
-
-  private def listSorted(): Seq[(FileSystem, FileStatus)] =
-    SSTableSource.optionPaths(options, "sstable").flatMap { p =>
-      val root = new Path(p)
-      val fs = root.getFileSystem(hconf.value)
-      SSTableSource.expandGlob(fs, root)
-        .flatMap(st => SSTableSource.listDataFiles(fs, st.getPath,
-          options.getOrElse("latestbatchonly", "false").toBoolean))
-        .map(st => (fs, st))
-    }.sortBy(p => (p._2.getModificationTime, p._2.getPath.toString))
-
-  override def initialOffset(): Offset = FilesOffset(0)
-  override def latestOffset(): Offset = FilesOffset(listSorted().size)
-  override def deserializeOffset(json: String): Offset =
-    FilesOffset(raw"""\{"n":(\d+)\}""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(s"bad sstable offset: $json")))
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[FilesOffset].n
-    val e = end.asInstanceOf[FilesOffset].n
-    val blocksize = options.getOrElse("blocksize", (64L * 1024 * 1024).toString).toLong
-    val batch = listSorted().slice(s, e)
-    SSTableSource.combineSplits(
-      SSTableSource.planFilesParallel(batch, blocksize, options.get("version")), options)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new SSTableReaderFactory(required,
-      options.getOrElse("skipcorrupt", "false").toBoolean, corruptAcc, hconf)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

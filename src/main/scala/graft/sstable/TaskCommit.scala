@@ -1,7 +1,10 @@
 package graft.sstable
 
+import scala.util.matching.Regex
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.Dataset
 
 /** Speculation-safe task commit for the engine's file sinks — the
   * Spark-side analog of the reference's inherited `FileOutputCommitter`
@@ -21,6 +24,25 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    Spark's own file sources) skips as hidden.
   */
 object TaskCommit {
+
+  /** One sink job over `rows`: clear every file in `outDir` whose name
+    * matches `finalNames` (a previous run's output, however many files
+    * it wrote), let `writePartition(fs, attemptDir, partitionIndex,
+    * rows)` write each partition's files into its attempt directory,
+    * publish them, then drop the job's temp tree. A partition that
+    * writes nothing publishes nothing. */
+  def write[T](rows: Dataset[T], outDir: String, finalNames: Regex)(
+      writePartition: (FileSystem, Path, Int, Iterator[T]) => Unit): Unit = {
+    val conf = rows.sparkSession.sessionState.newHadoopConf()
+    val hconf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val jobId = java.util.UUID.randomUUID().toString
+    preClean(conf, outDir, finalNames)
+    rows.rdd.mapPartitionsWithIndex { (idx, it) =>
+      withTaskAttemptDir(hconf.value, outDir, jobId)((fs, dir) => writePartition(fs, dir, idx, it))
+      Iterator.single(idx)
+    }.count()
+    cleanupJob(conf, outDir, jobId)
+  }
 
   def tempRoot(outDir: Path, jobId: String): Path =
     new Path(outDir, s"_temporary/$jobId")
@@ -65,16 +87,16 @@ object TaskCommit {
     else throw new java.io.IOException(s"commit rename failed: $tmp -> $finalPath")
   }
 
-  /** Driver-side job prologue: clear this job's final names so
-    * first-committer-wins can't resurrect a previous run's output
-    * (preserves the sinks' overwrite semantics). */
-  def preClean(conf: Configuration, outDir: String, finalNames: Seq[String]): Unit = {
+  /** Driver-side job prologue: delete every file in `outDir` whose
+    * name matches `finalNames`, so neither first-committer-wins nor a
+    * reader can pick up a previous run's output (the sinks' overwrite
+    * semantics). */
+  def preClean(conf: Configuration, outDir: String, finalNames: Regex): Unit = {
     val out = new Path(outDir)
     val fs = out.getFileSystem(conf)
-    finalNames.foreach { n =>
-      val p = new Path(out, n)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
+    if (fs.exists(out))
+      fs.listStatus(out).filter(st => st.isFile && finalNames.matches(st.getPath.getName))
+        .foreach(st => fs.delete(st.getPath, false))
   }
 
   /** Driver-side job epilogue: drop the job's temp tree (aborted and

@@ -24,9 +24,9 @@ object SSTable2Json {
     val input = args(0)
     val output = args(1)
     // digit-gated like maxCorrupt: a colon-free flag word (`compress`)
-    // in position 2 must not be parsed as a blocksize
-    val blocksize = if (args.length > 2 && args(2).nonEmpty && args(2).forall(_.isDigit)) args(2)
-      else (64L * 1024 * 1024).toString
+    // in position 2 must not be parsed as a blocksize; absent, the
+    // reader's default applies
+    val blocksize = args.lift(2).filter(a => a.nonEmpty && a.forall(_.isDigit))
     val maxCorrupt = if (args.length > 3 && args(3).forall(_.isDigit)) args(3).toLong else 0L
     def opt(prefix: String): Option[String] =
       args.find(_.startsWith(prefix + ":")).map(_.stripPrefix(prefix + ":"))
@@ -52,7 +52,8 @@ object SSTable2Json {
         opt("columntype").map("columnType" -> _),
         opt("keytype").map("keyType" -> _)).flatten.toMap
       val atoms = GraftSSTable.readAtoms(spark, input,
-        Map("blocksize" -> blocksize, "skipCorrupt" -> (maxCorrupt > 0).toString) ++ typeOpts)
+        blocksize.map("blocksize" -> _).toMap ++ typeOpts +
+          ("skipCorrupt" -> (maxCorrupt > 0).toString))
       val compacted = GraftSSTable.compact(atoms) // comparator from scan config
       val keyType = GraftSSTable.configuredKeyType(atoms).map(_.typeName).getOrElse("BytesType")
       val nameType = GraftSSTable.configuredColumnType(atoms).map(_.typeName).getOrElse("BytesType")

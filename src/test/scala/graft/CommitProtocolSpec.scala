@@ -88,13 +88,42 @@ class CommitProtocolSpec extends AnyFunSuite {
   test("preClean restores overwrite semantics across job runs") {
     val out = tmpDir()
     Files.write(Paths.get(out, "aeg-00000"), "stale previous run\n".getBytes)
-    TaskCommit.preClean(conf, out, Seq("aeg-00000"))
+    Files.write(Paths.get(out, "aeg-00001"), "stale previous run\n".getBytes)
+    Files.write(Paths.get(out, "notes.txt"), "not the sink's\n".getBytes)
+    TaskCommit.preClean(conf, out, raw"aeg-\d{5,}".r)
     TaskCommit.withTaskAttemptDir(conf, out, "job3") { (fs, dir) =>
       val os = fs.create(new org.apache.hadoop.fs.Path(dir, "aeg-00000"), true)
       os.write("fresh\n".getBytes); os.close()
     }
     TaskCommit.cleanupJob(conf, out, "job3")
     assert(new String(Files.readAllBytes(Paths.get(out, "aeg-00000"))) == "fresh\n")
+    assert(!Files.exists(Paths.get(out, "aeg-00001")), "every file of the sink's pattern is cleared")
+    assert(Files.exists(Paths.get(out, "notes.txt")), "files outside the pattern are kept")
+  }
+
+  test("a rerun that writes fewer files leaves none of the previous run's files") {
+    import graft.sstable.{AtomRec, SSTableFormat}
+    import spark.implicits._
+    def rows(prefix: String) = GraftSSTable.compact(spark.createDataset((1 to 30).map { i =>
+      AtomRec(f"$prefix$i%02d".getBytes, "src", Long.MinValue, SSTableFormat.KindColumn,
+        "n".getBytes, s"v$i".getBytes, Some(i.toLong), None, None, None, null)
+    }).toDF(), numPartitions = 2)
+    def keys(df: org.apache.spark.sql.DataFrame, hex: Boolean) =
+      df.select("key").distinct().collect().map { r =>
+        if (hex) r.getString(0) else new String(r.getAs[Array[Byte]](0))
+      }.sorted.toSeq
+    val second = (1 to 30).map(i => f"b$i%02d")
+
+    val aeg = tmpDir()
+    GraftSSTable.writeAegJson(rows("a"), aeg, numFiles = 3)
+    GraftSSTable.writeAegJson(rows("b"), aeg, numFiles = 1)
+    assert(keys(GraftSSTable.readAegJson(spark, aeg, clean = false), hex = true) ==
+      second.map(k => graft.sstable.CassType.hex(k.getBytes)))
+
+    val sst = tmpDir()
+    GraftSSTable.writeSSTable(rows("a"), sst, numFiles = 3, writeIndex = true)
+    GraftSSTable.writeSSTable(rows("b"), sst, numFiles = 1)
+    assert(keys(GraftSSTable.readAtoms(spark, sst), hex = false) == second)
   }
 
   test("writeAegJson end-to-end leaves committed files and no temp tree; rerun overwrites") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cql.{CqlPivot, CqlTable}
-import graft.sstable.{CellOut, CompactedRow, SSTableFormat}
+import graft.sstable.{CellOut, CompactedRow, SSTableFormat, SSTableVersion, SSTableWriter}
 
 /** CQL relational pivot (M4) against the reference fixtures whose
   * decoded goldens are known (FIXTURES.md §1.1-1.2), plus synthetic
@@ -138,6 +138,47 @@ class CqlPivotSpec extends AnyFunSuite {
     assert(r.getAs[Int]("stot") == 99)
     assert(r.getAs[Int]("v") == 42)
     assert(r.getAs[Map[String, Int]]("m") == Map("k1" -> 5, "k2" -> 6))
+  }
+
+  test("typed compaction of a CQL table with a static column reaches every pivoted row") {
+    def comp(parts: Array[Byte]*): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      parts.foreach { p =>
+        out.write(p.length >> 8); out.write(p.length & 0xff)
+        out.write(p); out.write(0)
+      }
+      out.toByteArray
+    }
+    // 2.0 static name: the 0xFFFF marker, an empty clustering component
+    def static(col: String): Array[Byte] =
+      Array[Byte](0xff.toByte, 0xff.toByte) ++ comp(Array.emptyByteArray, s(col))
+    def s(x: String): Array[Byte] = x.getBytes("UTF-8")
+    def i32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+    def cell(name: Array[Byte], value: Array[Byte], ts: Long) =
+      CellOut(SSTableFormat.KindColumn, name, value, ts, None, None, None)
+    val dir = java.nio.file.Files.createTempDirectory("cql-static").toFile
+    def sstable(gen: Int, cells: Seq[CellOut]): Unit = {
+      val f = new java.io.DataOutputStream(new java.io.FileOutputStream(
+        new java.io.File(dir, s"ks-t-jb-$gen-Data.db")))
+      SSTableWriter.writeRow(f, CompactedRow(s("p1"), Long.MinValue, cells), SSTableVersion("jb"))
+      f.close()
+    }
+    sstable(1, Seq(
+      cell(static("st"), s("old"), 1L),
+      cell(comp(i32(1), Array.emptyByteArray), Array.emptyByteArray, 1L),
+      cell(comp(i32(1), s("v")), s("a"), 1L)))
+    sstable(2, Seq(
+      cell(static("st"), s("new"), 2L),
+      cell(comp(i32(2), Array.emptyByteArray), Array.emptyByteArray, 2L),
+      cell(comp(i32(2), s("v")), s("b"), 2L)))
+
+    val cql = "CREATE TABLE ks.t (pk text, ck int, st text static, v text, PRIMARY KEY (pk, ck))"
+    val atoms = GraftSSTable.readAtoms(spark, dir.toString, Map("cql" -> cql))
+    val compacted = GraftSSTable.compact(atoms, numPartitions = 2)
+    val rows = GraftSSTable.pivotToRelational(compacted, cql).collect()
+      .map(r => (r.getAs[String]("pk"), r.getAs[Int]("ck"), r.getAs[String]("st"), r.getAs[String]("v")))
+      .sortBy(_._2).toSeq
+    assert(rows == Seq(("p1", 1, "new", "a"), ("p1", 2, "new", "b")))
   }
 
   test("wide-row valve drops an over-cap partition and counts it (no OOM path)") {

@@ -1,0 +1,31 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The SSTable core states each I/O decision once: one micro-batch
+  * stream serves both file-set sources, and only [[graft.sstable.TaskCommit]]
+  * clears a sink's previous output. */
+class StatedOnceSpec extends AnyFunSuite {
+
+  private def mainSources: Seq[(String, String)] = {
+    val main = Paths.get("src/main")
+    assert(Files.isDirectory(main), s"no src/main under ${sys.props("user.dir")}")
+    Files.walk(main).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map((p: Path) => main.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+  }
+
+  test("exactly one MicroBatchStream implementation in src/main") {
+    val impl = raw"(extends|with)\s+[\w.]*\bMicroBatchStream\b".r
+    val found = mainSources.flatMap { case (f, text) => impl.findAllIn(text).map(_ => f) }
+    assert(found == Seq("scala/graft/sstable/FileSetScan.scala"), s"implementations: $found")
+  }
+
+  test("no preClean call outside TaskCommit.scala") {
+    val callers = mainSources.collect {
+      case (f, text) if text.contains("preClean(") && !f.endsWith("/TaskCommit.scala") => f
+    }
+    assert(callers.isEmpty, s"preClean called from $callers")
+  }
+}

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
@@ -99,6 +101,29 @@ class StreamingSourceSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(spark.table("aeg_stream").count() == 3, "new snapshot file becomes a new batch")
     } finally q.stop()
+  }
+
+  test("maxFilesPerTrigger=1 reads three files as three batches (sstable and aegjson)") {
+    val sst = java.nio.file.Files.createTempDirectory("sst-stream-admit").toFile
+    (1 to 3).foreach(g => writeFile(sst, g, Seq(s"k$g" -> Seq(("c", s"v$g", g.toLong)))))
+    val aeg = java.nio.file.Files.createTempDirectory("aeg-stream-admit").toFile
+    (1 to 3).foreach { g =>
+      val line = AegJsonCodec.serialize(AegRow(s"k$g", Long.MinValue,
+        Seq(AegCell("c", s"v$g", g.toLong, None, None, None, None))))
+      java.nio.file.Files.write(java.nio.file.Paths.get(aeg.toString, f"aeg-$g%05d"),
+        (line + "\n").getBytes)
+    }
+    Seq("sstable" -> sst, "aegjson" -> aeg).foreach { case (format, dir) =>
+      val batchRows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val q = spark.readStream.format(format).option("maxFilesPerTrigger", "1")
+        .load(dir.toString)
+        .writeStream.foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          batchRows.add(df.count()); ()
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+      val counts = batchRows.asScala.toSeq.filter(_ > 0)
+      assert(counts == Seq(1L, 1L, 1L), s"$format: one file per batch, got $counts")
+    }
   }
 
   test("streamed atoms drive incremental compaction with cross-batch LWW state") {

@@ -98,7 +98,19 @@ class TypedComparatorSpec extends AnyFunSuite {
     val compVals = (for (i <- Seq(-2, 0, 3); s <- Seq("", "a", "ab", "b"))
       yield composite(intB(i), s.getBytes)) ++
       Seq(composite(intB(-2)), composite(intB(3))) // fewer components sort first
-    assertAgreement(comp, compVals, "Composite(Int32,UTF8)")
+    // 2.0 static names (0xFFFF marker, empty clustering component) sort
+    // after the empty name and before every other name
+    def staticName(col: String): Array[Byte] =
+      Array[Byte](-1, -1) ++ composite(Array.emptyByteArray, col.getBytes)
+    val staticVals = Seq(staticName(""), staticName("s"), staticName("t"), Array.emptyByteArray)
+    assertAgreement(comp, compVals ++ staticVals, "Composite(Int32,UTF8) with static names")
+    staticVals.init.foreach { st =>
+      assert(comp.compare(Array.emptyByteArray, st) < 0)
+      compVals.foreach(v => assert(comp.compare(st, v) < 0 && comp.compare(v, st) > 0))
+    }
+    val reversed = CassType.CompositeType(Seq(CassType.ReversedType(CassType.LongType), CassType.UTF8Type))
+    assertAgreement(reversed, Seq(longB(-1L), longB(0L), longB(7L)).map(composite(_, "v".getBytes)) ++
+      staticVals, "Composite(Reversed(Long),UTF8) with static names")
 
     val compUuid = CassType.CompositeType(Seq(CassType.TimeUUIDType))
     assertAgreement(compUuid, uuids.map(composite(_)), "Composite(TimeUUID)")
