@@ -216,7 +216,9 @@ object GraftSSTable {
   /** Write aeg-%05d text files, one per partition, rows ordered by raw
     * key bytes (deterministic file naming per
     * `output/JsonOutputFormat.java:62-67`). `numFiles=1` reproduces a
-    * single-reducer reference run byte-for-byte. */
+    * single-reducer reference run byte-for-byte. Commits through
+    * [[graft.sstable.TaskCommit]]: the files of a previous run are
+    * replaced only once this job has succeeded. */
   def writeAegJson(
       rows: Dataset[CompactedRow],
       outDir: String,
@@ -231,10 +233,8 @@ object GraftSSTable {
       .toDF("key", "line").repartitionByRange(numFiles, col("key"))
       .sortWithinPartitions(col("key"))
       .select("line").as[String]
-    TaskCommit.write(lines, outDir, raw"aeg-\d{5,}".r) { (fs, dir, idx, it) =>
-      val os = fs.create(new org.apache.hadoop.fs.Path(dir, f"aeg-$idx%05d"), true)
-      val w = new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(os, java.nio.charset.StandardCharsets.UTF_8))
+    TaskCommit.write(lines, outDir, AegJsonCodec.FileNames) { (fs, dir, idx, it) =>
+      val w = AegJsonCodec.create(fs, dir, idx)
       it.foreach { l => w.write(l); w.write('\n') }
       w.close()
     }
@@ -262,8 +262,6 @@ object GraftSSTable {
       .repartitionByRange(numFiles, col("key"))
       .sortWithinPartitions(col("key"))
       .as(org.apache.spark.sql.Encoders.product[CompactedRow])
-    // TaskCommit publishes in name order: the CompressionInfo and
-    // Index sidecars are in place before their Data.db
     val names = (java.util.regex.Pattern.quote(s"$dataset-$version-") +
       raw"\d{10,}-(Data|CompressionInfo|Index)\.db").r
     TaskCommit.write(sorted, outDir, names) { (fs, dir, idx, it) =>
@@ -324,8 +322,10 @@ object GraftSSTable {
     * entirely, matching `AegisthusLoader.java:215-241`), and files
     * split by newline-aligned byte ranges. The source is also
     * WRITABLE (`df.write.format("aegjson").save(dir)` with the same
-    * schema): tasks stage attempt-private files and the driver's
-    * job-level commit publishes them only after every task succeeds —
+    * schema) through the sinks' one commit protocol,
+    * [[graft.sstable.TaskCommit]]: tasks stage their files and the
+    * driver publishes them only after every task succeeds; overwrite
+    * mode replaces every `aeg-NNNNN` file, append never replaces one —
     * a surface the reference's read-only Pig loader never had. */
   def readAegJson(spark: SparkSession, path: String, clean: Boolean = true,
       mapView: Boolean = false): DataFrame =

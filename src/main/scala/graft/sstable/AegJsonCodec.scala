@@ -112,6 +112,16 @@ object AegJsonCodec {
     sb.toString
   }
 
+  /** Names of the aeg-JSON files a sink writes, one per partition. */
+  val FileNames: scala.util.matching.Regex = raw"aeg-\d{5,}".r
+
+  /** Open partition `part`'s `aeg-%05d` file in `dir` for UTF-8 lines. */
+  def create(fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
+      part: Int): java.io.BufferedWriter =
+    new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      fs.create(new org.apache.hadoop.fs.Path(dir, f"aeg-$part%05d"), true),
+      java.nio.charset.StandardCharsets.UTF_8))
+
   // The line layout (X6, byte-compatible with
   // `output/JsonOutputFormat.java:108-182`):
   // `key\t[source\t]{"key":{"deletedAt":D,"columns":[cell,...]}}`.

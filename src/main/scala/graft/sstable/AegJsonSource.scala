@@ -273,41 +273,34 @@ final class AegJsonReaderFactory(required: StructType, clean: Boolean,
 }
 
 // ---------------------------------------------------------------------------
-// DSv2 WRITE path (`df.write.format("aegjson").save(dir)`): the full
-// Spark-native commit protocol — tasks write attempt-private files and
-// return WriterCommitMessages; nothing reaches a final `aeg-%05d` path
-// until EVERY task has succeeded and the driver's job-level commit
-// renames the staged files (reference semantics: FileOutputCommitter
-// under `output/CustomFileNameFileOutputFormat.java:27-46`). Task and
-// job failures publish nothing; like Spark's own v1 committer, only a
-// driver crash mid-rename can leave a prefix published.
-// Input schema must be the source's own read schema, so
-// load → transform → save round-trips; ordering/partitioning is the
-// caller's (rows are written in partition order, files numbered by
-// partition id).
+// DSv2 WRITE path (`df.write.format("aegjson").save(dir)`) over the
+// sinks' one commit protocol, [[TaskCommit]]: each task stages its
+// `aeg-%05d` file (numbered by partition id) in its attempt directory
+// and returns that directory; the driver's job commit publishes every
+// file only after EVERY task has succeeded. Overwrite mode (truncate)
+// replaces every `aeg-NNNNN` file of the target; append refuses to
+// replace an existing one. Input schema must be the source's own read
+// schema, so load → transform → save round-trips; ordering and
+// partitioning are the caller's.
 // ---------------------------------------------------------------------------
 
 import org.apache.spark.sql.connector.write._
 
 final class AegJsonWriteBuilder(options: Map[String, String], schema: StructType)
     extends WriteBuilder with SupportsTruncate {
-  // truncate == SaveMode.Overwrite on a path-based table; the
-  // job-level commit overwrites by final name either way, so accepting
-  // truncate is how overwrite mode is declared supported
-  override def truncate(): WriteBuilder = this
+  // truncate == SaveMode.Overwrite on a path-based table
+  private var overwrite = false
+  override def truncate(): WriteBuilder = { overwrite = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite = {
       val path = SSTableSource.optionPaths(options, "aegjson").head
       AegJsonBatchWrite.validateSchema(schema)
-      new AegJsonBatchWrite(path, schema,
+      new AegJsonBatchWrite(path, schema, overwrite,
         new org.apache.spark.util.SerializableConfiguration(
           SparkSession.active.sessionState.newHadoopConf()))
     }
   }
 }
-
-final case class AegJsonCommitMessage(tempPath: String, finalName: String)
-    extends WriterCommitMessage
 
 object AegJsonBatchWrite {
   def validateSchema(schema: StructType): Unit = {
@@ -321,28 +314,18 @@ object AegJsonBatchWrite {
 final class AegJsonBatchWrite(
     outDir: String,
     schema: StructType,
+    overwrite: Boolean,
     hconf: org.apache.spark.util.SerializableConfiguration) extends BatchWrite {
 
-  private val jobId = java.util.UUID.randomUUID().toString
+  private val jobId = TaskCommit.newJobId()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new AegJsonWriterFactory(outDir, jobId, schema, hconf)
 
-  /** Driver-side job commit: every task succeeded — publish all files.
-    * Runs once on one JVM, so plain delete+rename per file is
-    * race-free here. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(hconf.value)
-    messages.foreach { case AegJsonCommitMessage(tmp, finalName) =>
-      val finalPath = new Path(out, finalName)
-      if (fs.exists(finalPath)) fs.delete(finalPath, false)
-      val tmpPath = new Path(tmp)
-      if (!fs.rename(tmpPath, finalPath))
-        throw new java.io.IOException(s"job commit rename failed: $tmpPath -> $finalPath")
-    }
-    TaskCommit.cleanupJob(hconf.value, outDir, jobId)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    try TaskCommit.publish(hconf.value, outDir, messages.toSeq.map { case TaskCommit.Staged(d) => d },
+      if (overwrite) Some(AegJsonCodec.FileNames) else None)
+    finally TaskCommit.cleanupJob(hconf.value, outDir, jobId)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     TaskCommit.cleanupJob(hconf.value, outDir, jobId)
@@ -355,13 +338,8 @@ final class AegJsonWriterFactory(
     hconf: org.apache.spark.util.SerializableConfiguration) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(hconf.value)
-    val finalName = f"aeg-$partitionId%05d"
-    val tmpPath = new Path(TaskCommit.tempRoot(out, jobId), s"attempt-$taskId/$finalName")
-    val os = fs.create(tmpPath, true)
-    val w = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(os, java.nio.charset.StandardCharsets.UTF_8))
+    val (fs, dir) = TaskCommit.attemptDir(hconf.value, outDir, jobId)
+    val w = AegJsonCodec.create(fs, dir, partitionId)
     val keyIdx = schema.fieldIndex("key")
     val delIdx = schema.fieldIndex("deletedAt")
     val colsIdx = schema.fieldIndex("columns")
@@ -387,12 +365,12 @@ final class AegJsonWriterFactory(
 
       override def commit(): WriterCommitMessage = {
         w.close()
-        AegJsonCommitMessage(tmpPath.toString, finalName)
+        TaskCommit.Staged(dir.toString)
       }
 
       override def abort(): Unit = {
         try w.close() catch { case _: Exception => () }
-        try fs.delete(tmpPath.getParent, true) catch { case _: Exception => () }
+        TaskCommit.discard(fs, dir)
       }
 
       override def close(): Unit = ()

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * `DataFileWriter` directly: schema derived from the DataFrame
   * (the reference instead demands a user-authored schema file and
   * merely validates it), one container file per partition, committed
-  * through the speculation-safe [[TaskCommit]] protocol. */
+  * through the sinks' one commit protocol, [[TaskCommit]]. */
 object AvroSink {
 
   /** Spark schema → Avro record schema. Every field is a
@@ -91,7 +91,8 @@ object AvroSink {
   }
 
   /** Write `df` as `<dataset>-%05d.avro` container files, one per
-    * partition, via the speculation-safe commit protocol. */
+    * partition, via [[TaskCommit]] (a failed job keeps the previous
+    * run's files). */
   def write(df: DataFrame, outDir: String, dataset: String = "export",
       numFiles: Int = -1): Unit = {
     val schema = df.schema

@@ -9,18 +9,22 @@ import graft.GraftSSTable
   *
   * Usage: SSTable2Json <inputDir> <outputDir> [blocksize] [maxCorrupt]
   *          [sstable:<ver>] [cqlfile:<path>] [schemafile:<path>]
-  *          [columntype:<marshal>] [keytype:<marshal>] [compress] [avro]
+  *          [columntype:<marshal>] [keytype:<marshal>]
+  *          [compress | compress:snappy | compress:deflate] [avro]
   *
   * `schemafile:`/`columntype:`/`keytype:` configure the marshal types
   * (the reference's `-cql`/`aegisthus.columntype`/`keytype` options):
   * the comparator drives the distributed sort+merge and the rendered
-  * aeg-JSON names. `compress` writes chunked-LZ4 sstables. The session
+  * aeg-JSON names. `compress` writes chunked-LZ4 sstables
+  * (`compress:snappy`/`compress:deflate` pick those codecs); `avro`
+  * writes the `cqlfile:` pivot as Avro instead of parquet. The session
   * is [[graft.GraftSession]]'s: `SPARK_MASTER` and `SPARK_GRAFT_CPUS`. */
 object SSTable2Json {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: SSTable2Json <inputDir> <outputDir> [blocksize] [maxCorrupt] [sstable:<ver>] " +
-        "[cqlfile:<path>] [schemafile:<path>] [columntype:<marshal>] [keytype:<marshal>] [compress]")
+        "[cqlfile:<path>] [schemafile:<path>] [columntype:<marshal>] [keytype:<marshal>] " +
+        "[compress | compress:snappy | compress:deflate] [avro]")
     val input = args(0)
     val output = args(1)
     // digit-gated like maxCorrupt: a colon-free flag word (`compress`)

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable.{AtomRec, SSTableFormat}
 
 /** DSv2 WRITE path for aeg-JSON (`df.write.format("aegjson")`):
-  * load → transform → save round-trips byte-exactly, and the
-  * job-level commit publishes nothing until every task succeeds. */
+  * load → transform → save round-trips byte-exactly, the job-level
+  * commit publishes nothing until every task succeeds, overwrite
+  * replaces every `aeg-NNNNN` file and append replaces none. */
 class AegJsonWriteSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestUtil.session()
@@ -53,10 +54,30 @@ class AegJsonWriteSpec extends AnyFunSuite {
     val back = spark.read.format("aegjson").option("clean", "false").load(dir2)
     assert(back.count() == df.count())
 
+    // overwrite with fewer partitions: the whole directory reads back
+    // as exactly the new rows, no stale aeg-00001/aeg-00002 merged in
     df.coalesce(1).write.format("aegjson").mode("overwrite").save(dir2)
-    val again = spark.read.format("aegjson").option("clean", "false")
-      .load(dir2 + "/aeg-00000")
+    val again = spark.read.format("aegjson").option("clean", "false").load(dir2)
     assert(again.count() == df.count())
+  }
+
+  test("append never replaces an existing file: it fails naming it") {
+    val dir1 = Files.createTempDirectory("aegw-append-src").toString
+    GraftSSTable.writeAegJson(mkRows(20), dir1, numFiles = 1)
+    val df = spark.read.format("aegjson").option("clean", "false").load(dir1)
+
+    val dir2 = Files.createTempDirectory("aegw-append").toString
+    df.coalesce(1).write.format("aegjson").mode("append").save(dir2)
+    val before = Files.readAllBytes(Paths.get(dir2, "aeg-00000"))
+    val e = intercept[Exception] {
+      df.limit(5).coalesce(1).write.format("aegjson").mode("append").save(dir2)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("aeg-00000")), s"error must name the colliding file: $messages")
+    assert(java.util.Arrays.equals(before, Files.readAllBytes(Paths.get(dir2, "aeg-00000"))),
+      "the first append's file keeps its rows")
+    assert(!new java.io.File(dir2, "_temporary").exists)
   }
 
   test("a failing task aborts the job: no final files published") {

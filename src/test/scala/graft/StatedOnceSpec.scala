@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The SSTable core states each I/O decision once: one micro-batch
   * stream serves both file-set sources, and only [[graft.sstable.TaskCommit]]
-  * clears a sink's previous output. */
+  * (plus distcp's per-file copy commit) makes a written file visible. */
 class StatedOnceSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -22,10 +22,11 @@ class StatedOnceSpec extends AnyFunSuite {
     assert(found == Seq("scala/graft/sstable/FileSetScan.scala"), s"implementations: $found")
   }
 
-  test("no preClean call outside TaskCommit.scala") {
-    val callers = mainSources.collect {
-      case (f, text) if text.contains("preClean(") && !f.endsWith("/TaskCommit.scala") => f
-    }
-    assert(callers.isEmpty, s"preClean called from $callers")
+  test("FileSystem.rename only in TaskCommit.scala and tools/ParallelCopy.scala") {
+    val renamers = mainSources.collect {
+      case (f, text) if raw"\.rename\(".r.findFirstIn(text).isDefined => f
+    }.sorted
+    assert(renamers == Seq("scala/graft/sstable/TaskCommit.scala", "scala/graft/tools/ParallelCopy.scala"),
+      s"rename called from $renamers")
   }
 }
