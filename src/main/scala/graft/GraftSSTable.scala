@@ -40,16 +40,17 @@ object GraftSSTable {
       .filter(_.metadata.contains("columnType"))
       .map(f => CassType.parse(f.metadata.getString("columnType")))
 
-  /** A1 compaction. Input may be any union of per-file atom frames
-    * (mixed sstable versions merge correctly — the shuffle interleaves
-    * them by (key, name, ts) exactly like the reference's secondary
-    * sort). */
   /** rows_written counter from the last compact() action (A3 analog of
     * the reference's batched counter, `CassSSTableReducer.java:107-118`
     * — Spark accumulators batch per-task automatically). */
   @volatile var rowsWritten: Option[org.apache.spark.util.LongAccumulator] = None
 
-  /** @param columnType    column-name comparator (the reference's
+  /** A1 compaction. Input may be any union of per-file atom frames
+    * (mixed sstable versions merge correctly — the shuffle interleaves
+    * them by (key, name, ts) exactly like the reference's secondary
+    * sort).
+    *
+    * @param columnType    column-name comparator (the reference's
     *                       `aegisthus.columntype`,
     *                       `AegisthusKeySortingComparator.java:35-61`):
     *                       the shuffle sort orders names by a

@@ -235,13 +235,14 @@ object SparkEntry {
     * golden output: the same fixture tree cass_compaction batch-
     * compacts is fed file-by-file (maxFilesPerTrigger=1) through the
     * sstable MicroBatchStream into
-    * [[graft.streaming.StreamingCompaction.compactIncremental]]'s
-    * mapGroupsWithState merge; the per-key FINAL state (last update
-    * wins, idempotent per-batch parquet sink) must agree with the
-    * golden file's per-key deletedAt and live-column count — the
+    * [[graft.streaming.StreamingCompaction.compactIncremental]], which
+    * folds each micro-batch with the per-key state through the batch
+    * merge under mapGroupsWithState; the per-key FINAL state (last
+    * update wins, idempotent per-batch parquet sink) must agree with
+    * the golden file's per-key deletedAt and live-column count — the
     * oracle parses the reference's own aeg-json lines with DuckDB's
-    * JSON reader. Proves the incremental A1 state machine converges
-    * to the batch answer on the reference's data, not just on
+    * JSON reader. Proves the fold converges to the batch answer on
+    * the reference's data, range tombstones included, not just on
     * writer-generated fixtures (StreamingCompactionSpec's chaos
     * cases). */
   val cassStreamCompaction: QueryDef = QueryDef(

@@ -471,7 +471,7 @@ final class SSTableReaderFactory(
       private def absorb(e: Exception): Unit = {
         org.slf4j.LoggerFactory.getLogger(classOf[SSTableReaderFactory])
           .error(s"failure deserializing file ${members(idx).path}", e)
-        if (corruptAcc != null) corruptAcc.add(1L)
+        corruptAcc.add(1L)
         if (scanner != null) { try scanner.close() catch { case _: Exception => () } }
         scanner = null
         idx += 1

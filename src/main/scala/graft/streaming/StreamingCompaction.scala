@@ -2,97 +2,83 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-import graft.sstable.{AtomRec, CassType, SSTableFormat}
+import graft.GraftSSTable
+import graft.sstable.{AtomRec, CassType, Compaction, CompactedRow, SSTableFormat}
 
-/** Incremental (streaming) compaction: the A1 merge recast as a
-  * merge-associative per-key state machine under mapGroupsWithState —
-  * the design SURVEY §2.9 calls for ("design the compaction Aggregator
-  * to be merge-associative so it could later run under
-  * mapGroupsWithState").
+/** Incremental (streaming) compaction: the batch merge
+  * ([[graft.sstable.Compaction.merge]]) folded over micro-batches under
+  * mapGroupsWithState — the merge-associative aggregator SURVEY §2.9
+  * calls for. There is no second statement of the merge rules here.
   *
-  * Scope: last-writer-wins cells + row-tombstone watermark + RANGE
-  * tombstones held in state. The reference documents that ITS
-  * streaming reducer cannot do RTs incrementally ("This will not be
-  * true if we go to partial incremental processing",
-  * `CassSSTableReducer.java:143-146`) — but that constraint is a
-  * property of their forward-only sorted-stream sweep, not of the
-  * semantics: with per-key STATE the death rule is the
-  * order-independent predicate "∃ RT with min <= name <= max and
-  * rt.ts >= cell.ts" (every covering RT sorts at-or-before its
-  * covered cells in the batch sweep, so the sweep computes exactly
-  * this predicate), and a state machine that retains RT intervals
-  * applies it across any batch arrival order. Interval bounds are
-  * compared as lowercase hex strings — an order-preserving image of
-  * BytesType's unsigned lexicographic comparator (2 fixed chars per
-  * byte), the same default the batch merge uses. Typed comparators
-  * (aegisthus.columntype) remain batch-only.
+  * State per key is the part of the input the merge can still need:
+  * the last merge's surviving cells (as value-less atoms), every
+  * distinct range tombstone seen so far, and one empty-row marker
+  * carrying `deletedAt`. Each micro-batch is sorted with that state
+  * the way the compaction shuffle sorts (comparator sort key, then
+  * ts) and merged once. Dropping the rest is exact: a superseded cell
+  * has a lower ts than its survivor, so whatever kills the survivor
+  * kills it too; a shadowed cell stays shadowed by the retained range
+  * tombstone; a purged cell stays below the row watermark, which only
+  * grows. State is bounded by live columns plus range tombstones, not
+  * by input size.
   *
-  * State per key is bounded by live column count (cells map) + RT
-  * interval count, not by input size — wide-row safe like the batch
-  * merge: cells killed by an RT are pruned from state immediately,
-  * and arriving cells already covered by a stored RT are never
-  * admitted.
+  * The comparator is the one configured on the scan (the reader's
+  * `cql` / `columnType` options), else BytesType — the same
+  * resolution [[graft.GraftSSTable.compact]] makes, so a typed scan
+  * compacts the same way in both modes.
   */
 object StreamingCompaction {
 
-  final case class CellSt(ts: Long, kind: String)
-  final case class RtSt(minHex: String, maxHex: String, ts: Long)
-  final case class RowState(deletedAt: Long, cells: Map[String, CellSt],
-      rts: List[RtSt])
   final case class RowUpdate(keyHex: String, deletedAt: Long, nLiveColumns: Int)
 
-  private def covers(rt: RtSt, nameHex: String): Boolean =
-    rt.minHex <= nameHex && nameHex <= rt.maxHex
+  private val StateSource = "state"
 
-  /** Merge a batch of atoms into row state — associative and
-    * commutative up to timestamp ties (LWW keeps the higher ts; equal
-    * ts keeps the incumbent, matching the batch merge's sorted-input
-    * behavior for distinct values). Order-independent for counts:
-    * the RT death rule is a global predicate, enforced both on cell
-    * admission and retroactively when an RT lands. */
-  def mergeAtoms(st: RowState, atoms: Iterator[AtomRec]): RowState = {
-    var deletedAt = st.deletedAt
-    var cells = st.cells
-    var rts = st.rts
-    atoms.foreach { a =>
-      if (a.rowDeletedAt > deletedAt) deletedAt = a.rowDeletedAt
-      a.kind match {
-        case SSTableFormat.KindEmptyRow => ()
-        case SSTableFormat.KindRangeTombstone =>
-          val rt = RtSt(CassType.hex(a.name), CassType.hex(a.rtMax), a.ts.get)
-          if (!rts.contains(rt)) {
-            rts = rt :: rts
-            cells = cells.filterNot { case (n, c) =>
-              covers(rt, n) && rt.ts >= c.ts }
-          }
-        case _ =>
-          val nameHex = CassType.hex(a.name)
-          val ts = a.ts.get
-          if (!rts.exists(rt => covers(rt, nameHex) && rt.ts >= ts)) {
-            cells.get(nameHex) match {
-              case Some(c) if ts <= c.ts => ()
-              case _ => cells = cells.updated(nameHex, CellSt(ts, a.kind))
-            }
-          }
-      }
+  /** the compaction shuffle's order: name sort key unsigned (null-named
+    * row markers first), then ts. */
+  private val ShuffleOrder: Ordering[(Option[Array[Byte]], Option[Long])] =
+    Ordering.Tuple2(
+      Ordering.Option(Ordering.fromLessThan[Array[Byte]](CassType.unsignedCompare(_, _) < 0)),
+      Ordering.Option(Ordering.Long))
+
+  /** atom identity by content (byte arrays compared by value). */
+  private def content(a: AtomRec): List[Any] =
+    a.productIterator.map { case b: Array[Byte] => b.toSeq; case v => v }.toList
+
+  /** Merge one micro-batch of one key into its state: returns the
+    * compacted row and the next state. The stable sort puts state
+    * before the batch, so an equal-ts tie keeps the incumbent. */
+  private[graft] def fold(
+      state: Seq[AtomRec],
+      batch: Iterator[AtomRec],
+      ct: CassType): (CompactedRow, Seq[AtomRec]) = {
+    val atoms = state ++ batch
+    val sorted = atoms.map(a => (Option(a.name).map(ct.sortKey), a.ts) -> a)
+      .sortBy(_._1)(ShuffleOrder).map(_._2)
+    val row = Compaction.merge(sorted.iterator, ct).next()
+    val marker = AtomRec(row.key, StateSource, row.deletedAt, SSTableFormat.KindEmptyRow,
+      null, Array.emptyByteArray, None, None, None, None, null)
+    val cells = row.columns.map { c =>
+      AtomRec(row.key, StateSource, Long.MinValue, c.kind, c.name, Array.emptyByteArray,
+        Some(c.ts), c.ttl, c.localDeletionTime, c.tsOfLastDelete, null)
     }
-    RowState(deletedAt, cells, rts)
+    val rangeTombstones = atoms.filter(_.kind == SSTableFormat.KindRangeTombstone)
+      .map(_.copy(source = StateSource, rowDeletedAt = Long.MinValue))
+      .distinctBy(content)
+    (row, marker +: (cells ++ rangeTombstones))
   }
-
-  def liveColumns(st: RowState): Int = st.cells.count(_._2.ts > st.deletedAt)
 
   /** Streaming (or batch) incremental compaction: emits the current
     * compacted view of each row key on every update. */
   def compactIncremental(atoms: Dataset[AtomRec]): Dataset[RowUpdate] = {
     val spark = atoms.sparkSession
     import spark.implicits._
+    val ct = GraftSSTable.configuredColumnType(atoms.toDF()).getOrElse(CassType.BytesType)
     atoms.groupByKey(a => CassType.hex(a.key))
-      .mapGroupsWithState[RowState, RowUpdate](GroupStateTimeout.NoTimeout) {
-        (keyHex, it, state: GroupState[RowState]) =>
-          val st0 = state.getOption.getOrElse(RowState(Long.MinValue, Map.empty, Nil))
-          val st = mergeAtoms(st0, it)
-          state.update(st)
-          RowUpdate(keyHex, st.deletedAt, liveColumns(st))
+      .mapGroupsWithState[Seq[AtomRec], RowUpdate](GroupStateTimeout.NoTimeout) {
+        (keyHex, it, state: GroupState[Seq[AtomRec]]) =>
+          val (row, next) = fold(state.getOption.getOrElse(Nil), it, ct)
+          state.update(next)
+          RowUpdate(keyHex, row.deletedAt, row.columns.size)
       }
   }
 }

@@ -4,12 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable._
 
-/** Differential fuzz for distributed-compaction determinism: a random
-  * atom soup (LWW collisions, deleted cells, row tombstones, range
-  * tombstones, empty rows) must compact to the SAME result regardless
-  * of shuffle partition count and input row order — the property that
-  * makes the engine's answer well-defined on a 1000-executor cluster,
-  * where both are scheduling accidents.
+/** Differential fuzz for distributed compaction. A random atom soup
+  * (LWW collisions, deleted cells, row tombstones, range tombstones,
+  * empty rows) must compact to the SAME result regardless of shuffle
+  * partition count and input row order — the property that makes the
+  * engine's answer well-defined on a 1000-executor cluster, where both
+  * are scheduling accidents. A larger soup (plus expiring and counter
+  * cells, BytesType and LongType names) must compact, in batch and
+  * through the streaming fold, to what the independent [[MergeModel]]
+  * expects, so a merge that is wrong the same way every time fails
+  * too.
   *
   * Values are a function of (name, ts) so reference-inherited equal-ts
   * ties are value-identical (the reference's secondary sort has the
@@ -45,6 +49,44 @@ class CompactionDifferentialSpec extends AnyFunSuite {
           val ts = rnd.nextInt(100).toLong
           AtomRec(key.getBytes, "src", Long.MinValue, SSTableFormat.KindColumn,
             nm.getBytes, s"$nm@$ts".getBytes, Some(ts), None, None, None, null)
+      }
+    }
+  }
+
+  /** `n` atoms over 150 keys and 24 names of type `ct` (LongType names
+    * include negatives, whose unsigned byte order differs from the
+    * comparator's); range tombstones span up to 3 adjacent names in
+    * comparator order. */
+  private def soup(seed: Long, n: Int, ct: CassType): Seq[AtomRec] = {
+    val rnd = new scala.util.Random(seed)
+    val keys = (1 to 150).map(i => f"k$i%03d".getBytes)
+    val names = (ct match {
+      case CassType.LongType =>
+        (-12 to 11).map(v => java.nio.ByteBuffer.allocate(8).putLong(v * 1000003L).array())
+      case _ => (1 to 24).map(i => f"n$i%02d".getBytes)
+    }).sortWith(ct.compare(_, _) < 0)
+    def cell(key: Array[Byte], kind: String, ttl: Option[Int] = None, ldt: Option[Int] = None,
+        tsOfLastDelete: Option[Long] = None) = {
+      val nm = names(rnd.nextInt(names.length))
+      val ts = rnd.nextInt(100).toLong
+      AtomRec(key, "src", Long.MinValue, kind, nm, s"${CassType.hex(nm)}@$ts".getBytes, Some(ts),
+        ttl, ldt, tsOfLastDelete, null)
+    }
+    (1 to n).map { _ =>
+      val key = keys(rnd.nextInt(keys.length))
+      rnd.nextInt(20) match {
+        case 0 =>
+          AtomRec(key, "src", rnd.nextInt(40).toLong, SSTableFormat.KindEmptyRow,
+            null, Array.emptyByteArray, None, None, None, None, null)
+        case 1 | 2 =>
+          val lo = rnd.nextInt(names.length)
+          val hi = (lo + rnd.nextInt(3)).min(names.length - 1)
+          AtomRec(key, "src", Long.MinValue, SSTableFormat.KindRangeTombstone,
+            names(lo), null, Some(rnd.nextInt(100).toLong), None, None, None, names(hi))
+        case 3 | 4 => cell(key, SSTableFormat.KindDeleted)
+        case 5 => cell(key, SSTableFormat.KindExpiring, Some(60), Some(1000))
+        case 6 => cell(key, SSTableFormat.KindCounter, tsOfLastDelete = Some(0L))
+        case _ => cell(key, SSTableFormat.KindColumn)
       }
     }
   }
@@ -89,5 +131,41 @@ class CompactionDifferentialSpec extends AnyFunSuite {
     val rows = GraftSSTable.compact(spark.createDataset(atoms).toDF()).collect()
     val kept = rows.flatMap(_.columns).map(c => new String(c.value)).toSet
     assert(kept == Set("k1.a@10", "k1.d@10", "k2.b@60"))
+  }
+
+  test("batch compact and the streaming fold agree with the independent merge model (10k atoms, BytesType and LongType names)") {
+    import spark.implicits._
+    for (ct <- Seq(CassType.BytesType, CassType.LongType); seed <- 1 to 3) {
+      val ctx = s"$ct seed=$seed"
+      val atoms = soup(seed * 104729L, 10000, ct)
+      val byKey = atoms.groupBy(a => CassType.hex(a.key))
+      val want = byKey.map { case (k, as) => k -> MergeModel.expected(as, ct) }
+      // the soup exercises every rule: range tombstones shadow cells
+      // the row watermark and LWW alone would keep
+      val noRt = byKey.values.map(as =>
+        MergeModel.expected(as.filter(_.kind != SSTableFormat.KindRangeTombstone), ct).survivors.size).sum
+      val survivors = want.values.map(_.survivors.size).sum
+      assert(survivors > 500 && survivors < noRt, s"$ctx: $survivors survivors, $noRt without range tombstones")
+
+      val batch = GraftSSTable.compact(spark.createDataset(atoms).toDF(), columnType = ct,
+        numPartitions = 4).collect()
+      assert(batch.map(r => CassType.hex(r.key)).toSet == want.keySet, ctx)
+      batch.foreach { r =>
+        val k = CassType.hex(r.key)
+        MergeModel.disagreement(r, want(k)).foreach(e => fail(s"$ctx batch key $k: $e"))
+      }
+
+      val rnd = new scala.util.Random(seed)
+      byKey.foreach { case (k, as) =>
+        Seq("forward" -> as, "reversed" -> as.reverse, "shuffled" -> rnd.shuffle(as)).foreach {
+          case (order, ordered) =>
+            Seq(1, 3, ordered.size).foreach { chunk =>
+              val (row, _) = MergeModel.foldChunks(ordered, chunk, ct)
+              MergeModel.disagreement(row, want(k))
+                .foreach(e => fail(s"$ctx fold $order chunk $chunk key $k: $e"))
+            }
+        }
+      }
+    }
   }
 }

@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SSTable core states each I/O decision once: one micro-batch
-  * stream serves both file-set sources, and only [[graft.sstable.TaskCommit]]
-  * (plus distcp's per-file copy commit) makes a written file visible. */
+/** The SSTable core states each decision once: one micro-batch stream
+  * serves both file-set sources, only [[graft.sstable.TaskCommit]]
+  * (plus distcp's per-file copy commit) makes a written file visible,
+  * and only [[graft.sstable.Compaction]] applies the merge rules. */
 class StatedOnceSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -28,5 +29,15 @@ class StatedOnceSpec extends AnyFunSuite {
     }.sorted
     assert(renamers == Seq("scala/graft/sstable/TaskCommit.scala", "scala/graft/tools/ParallelCopy.scala"),
       s"rename called from $renamers")
+  }
+
+  test("range-tombstone bounds (.rtMax) read only by Compaction.scala and the reader that emits them") {
+    // a second merge needs the upper bound to decide coverage; the
+    // streaming fold goes through Compaction.merge instead
+    val readers = mainSources.collect {
+      case (f, text) if raw"\.rtMax\b".r.findFirstIn(text).isDefined => f
+    }.sorted
+    assert(readers == Seq("scala/graft/sstable/Compaction.scala", "scala/graft/sstable/SSTableSource.scala"),
+      s".rtMax read in $readers")
   }
 }

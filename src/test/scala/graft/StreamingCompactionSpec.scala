@@ -2,12 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sstable.{AtomRec, CassType, CellOut, CompactedRow, SSTableFormat, SSTableVersion, SSTableWriter}
+import graft.sstable.{AtomRec, CassType, CellOut, CompactedRow, SSTableFormat, SSTableSource, SSTableVersion, SSTableWriter}
 import graft.streaming.StreamingCompaction
 
-/** Streaming compaction parity: the incremental state machine must
-  * agree with the batch merge on the reference fixtures (RT-free
-  * corpus), and be order-insensitive (associativity check). */
+/** Streaming compaction parity: the per-key fold of micro-batches
+  * through the batch merge must agree with one batch compaction on the
+  * reference fixtures (range tombstones included) and on typed
+  * comparators, and reach the same state whatever the chunking and
+  * arrival order. The restart-chaos, task-chaos and typed-comparator
+  * cases need no file outside the repo; the fixture cases read the
+  * reference corpus. */
 class StreamingCompactionSpec extends AnyFunSuite {
   private val testRoot = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
@@ -15,12 +19,7 @@ class StreamingCompactionSpec extends AnyFunSuite {
 
   test("incremental compaction (streaming engine) matches batch merge") {
     import spark.implicits._
-    // CQL list overwrites emit range tombstones even in randomtable —
-    // incremental compaction refuses RTs by design (the reference
-    // documents they need batch completeness), so parity is checked on
-    // the RT-free cell stream for both sides
     val atomsDf = GraftSSTable.readAtoms(spark, s"$testRoot/2.0.10/randomtable/input")
-      .filter("kind != 'rt'")
     val atoms = atomsDf.select("key", "source", "rowDeletedAt", "kind", "name", "value",
       "ts", "ttl", "localDeletionTime", "tsOfLastDelete", "rtMax").as[AtomRec]
 
@@ -136,6 +135,70 @@ class StreamingCompactionSpec extends AnyFunSuite {
       "late low-ts cell must stay shadowed by the pre-restart tombstone")
   }
 
+  test("typed comparators stream: DecimalType and LongType names compact as the batch merge does") {
+    import spark.implicits._
+    // final per-key (deletedAt, live columns) of a streaming run, and
+    // how many micro-batches it took
+    def streamed(atoms: org.apache.spark.sql.Dataset[AtomRec]): (Map[String, (Long, Long)], Int) = {
+      val fin = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
+      val batches = new java.util.concurrent.atomic.AtomicInteger
+      val q = StreamingCompaction.compactIncremental(atoms)
+        .writeStream.outputMode("update")
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[StreamingCompaction.RowUpdate], _: Long) =>
+          batches.incrementAndGet()
+          df.collect().foreach(u => fin(u.keyHex) = (u.deletedAt, u.nLiveColumns.toLong))
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      (fin.toMap, batches.get)
+    }
+    def batch(atoms: org.apache.spark.sql.DataFrame): Map[String, (Long, Long)] =
+      GraftSSTable.compact(atoms, numPartitions = 2).collect()
+        .map(r => CassType.hex(r.key) -> ((r.deletedAt, r.columns.size.toLong))).toMap
+    val key = CassType.hex("k".getBytes)
+
+    // DecimalType: 2.5 @10 and 2.50 @20 are one name to the comparator
+    val dir = java.nio.file.Files.createTempDirectory("sst-decimal").toFile
+    def decimal(unscaled: Long, scale: Int): Array[Byte] = {
+      val u = java.math.BigInteger.valueOf(unscaled).toByteArray
+      java.nio.ByteBuffer.allocate(4 + u.length).putInt(scale).put(u).array()
+    }
+    Seq((1, decimal(25, 1), 10L), (2, decimal(250, 2), 20L)).foreach { case (gen, name, ts) =>
+      val f = new java.io.DataOutputStream(new java.io.FileOutputStream(
+        new java.io.File(dir, f"ks-cf-jb-$gen%04d-Data.db")))
+      SSTableWriter.writeRow(f, CompactedRow("k".getBytes, Long.MinValue,
+        Seq(CellOut(SSTableFormat.KindColumn, name, "v".getBytes, ts, None, None, None))),
+        SSTableVersion("jb"))
+      f.close()
+    }
+    val (decStream, decBatches) = streamed(spark.readStream.format("sstable")
+      .option("columnType", "DecimalType").option("maxFilesPerTrigger", "1")
+      .load(dir.toString).as[AtomRec])
+    assert(decBatches >= 2, "each file is its own micro-batch")
+    assert(decStream(key)._2 == 1L, s"2.5 and 2.50 must collapse to one live column: $decStream")
+    assert(decStream == batch(GraftSSTable.readAtoms(spark, dir.toString,
+      Map("columnType" -> "DecimalType"))))
+
+    // LongType: a range tombstone over [-1, 2] kills -1 and 2, not 100
+    // (under BytesType order -1 = ff..ff sorts after 2). The writer
+    // cannot write range tombstones, so the atoms are staged as parquet
+    // read with the scan's typed schema.
+    def long(v: Long): Array[Byte] = java.nio.ByteBuffer.allocate(8).putLong(v).array()
+    val cells = Seq(-1L, 2L, 100L).map(v => AtomRec("k".getBytes, "g1", Long.MinValue,
+      SSTableFormat.KindColumn, long(v), "v".getBytes, Some(10L), None, None, None, null))
+    val rt = AtomRec("k".getBytes, "g2", Long.MinValue, SSTableFormat.KindRangeTombstone,
+      long(-1L), null, Some(50L), None, None, None, long(2L))
+    val staged = java.nio.file.Files.createTempDirectory("atoms-long").toString
+    Seq(cells, Seq(rt)).foreach(as =>
+      spark.createDataset(as).coalesce(1).write.mode("append").parquet(staged))
+    val schema = SSTableSource.schemaFor(Map("columnType" -> "LongType"))
+    val (longStream, longBatches) = streamed(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(staged).as[AtomRec])
+    assert(longBatches >= 2, "cells and range tombstone arrive in separate micro-batches")
+    assert(longStream(key)._2 == 1L, s"only name 100 survives: $longStream")
+    assert(longStream == batch(spark.read.schema(schema).parquet(staged)))
+  }
+
   test("merge is associative: split input arbitrarily, same state") {
     import spark.implicits._
     val atoms = GraftSSTable.readAtoms(spark, s"$testRoot/1.2.18/randomtable/input")
@@ -143,26 +206,32 @@ class StreamingCompactionSpec extends AnyFunSuite {
       .select("key", "source", "rowDeletedAt", "kind", "name", "value",
         "ts", "ttl", "localDeletionTime", "tsOfLastDelete", "rtMax")
       .as[AtomRec].collect().toSeq
+    // canonical state: deletedAt, the sorted survivors and the set of
+    // range tombstones
+    def canonical(st: Seq[AtomRec]) = {
+      val (markers, rest) = st.partition(_.kind == SSTableFormat.KindEmptyRow)
+      val (rts, cells) = rest.partition(_.kind == SSTableFormat.KindRangeTombstone)
+      assert(markers.size == 1)
+      (markers.head.rowDeletedAt,
+        cells.map(c => (CassType.hex(c.name), c.ts.get, c.kind)).sorted,
+        rts.map(r => (CassType.hex(r.name), CassType.hex(r.rtMax), r.ts.get)).toSet)
+    }
     val byKey = atoms.groupBy(a => CassType.hex(a.key))
     byKey.foreach { case (_, as) =>
-      val all = StreamingCompaction.mergeAtoms(
-        StreamingCompaction.RowState(Long.MinValue, Map.empty, Nil), as.iterator)
+      val all = StreamingCompaction.fold(Nil, as.iterator, CassType.BytesType)._2
       Seq(1, 3, 7).foreach { chunk =>
-        val stepped = as.grouped(chunk).foldLeft(
-          StreamingCompaction.RowState(Long.MinValue, Map.empty, Nil)) {
-          (st, batch) => StreamingCompaction.mergeAtoms(st, batch.iterator)
-        }
-        assert(stepped == all)
+        val stepped = MergeModel.foldChunks(as, chunk, CassType.BytesType)._2
+        assert(canonical(stepped) == canonical(all))
       }
     }
   }
 
   test("range tombstones in state: any chunking or arrival order yields the batch counts (2.0.10 fixture, RTs included)") {
     // the reference says its streaming reducer can't do RTs
-    // incrementally; the stateful death-rule predicate can — prove
-    // (a) chunk-invariance, (b) ORDER-invariance of the observable
-    // (deletedAt, liveColumns), and (c) agreement with the batch
-    // merge, on the reference's own RT-bearing fixture
+    // incrementally; a fold that keeps every range tombstone in state
+    // can — prove (a) chunk-invariance, (b) ORDER-invariance of the
+    // observable (deletedAt, live columns), and (c) agreement with the
+    // batch merge, on the reference's own RT-bearing fixture
     import spark.implicits._
     val atoms = GraftSSTable.readAtoms(spark, s"$testRoot/2.0.10/randomtable/input")
       .select("key", "source", "rowDeletedAt", "kind", "name", "value",
@@ -180,11 +249,8 @@ class StreamingCompactionSpec extends AnyFunSuite {
     assert(byKey.keySet == batch.keySet)
     byKey.foreach { case (k, as) =>
       def obs(ordered: Seq[AtomRec], chunk: Int) = {
-        val st = ordered.grouped(chunk).foldLeft(
-          StreamingCompaction.RowState(Long.MinValue, Map.empty, Nil)) {
-          (s, b) => StreamingCompaction.mergeAtoms(s, b.iterator)
-        }
-        (st.deletedAt, StreamingCompaction.liveColumns(st))
+        val (row, _) = MergeModel.foldChunks(ordered, chunk, CassType.BytesType)
+        (row.deletedAt, row.columns.size)
       }
       Seq(1, 3, as.size.max(1)).foreach { chunk =>
         assert(obs(as, chunk) == batch(k), s"key $k chunk $chunk")
