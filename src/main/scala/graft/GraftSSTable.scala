@@ -153,7 +153,8 @@ object GraftSSTable {
     }
   }
 
-  /** aeg-JSON lines (X6), keyed for ordering. */
+  /** aeg-JSON lines (X6), keyed for ordering. The type names are
+    * parsed here, on the driver: a bad name fails the call, not a task. */
   def aegJsonLines(
       rows: Dataset[CompactedRow],
       keyType: String = "BytesType",
@@ -162,11 +163,8 @@ object GraftSSTable {
       maxColSize: Long = -1L): Dataset[(Array[Byte], String)] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val (kt, nt, vt) = (keyType, nameType, valueType)
-    rows.map { r =>
-      (r.key, Compaction.toAegJson(r, CassType.parse(kt), CassType.parse(nt),
-        CassType.parse(vt), maxColSize))
-    }
+    val (kt, nt, vt) = (CassType.parse(keyType), CassType.parse(nameType), CassType.parse(valueType))
+    rows.map(r => (r.key, Compaction.toAegJson(r, kt, nt, vt, maxColSize)))
   }
 
   /** Snapshot diff — the ops question one compaction can't answer:
@@ -189,19 +187,19 @@ object GraftSSTable {
     // one shared counter across both compactions, so rowsWritten
     // reports the whole diff's row count, not just the new side's
     val acc = spark.sparkContext.longAccumulator("compaction.rowsWritten")
-    // render with the CF's configured types (the reader's keyType/
-    // columnType options, case-insensitive like DSv2, plus a
-    // valueType render option) so old_line/new_line match what
-    // writeAegJson emits for the same typed CF
-    val opts = options.map { case (k, v) =>
-      k.toLowerCase(java.util.Locale.ROOT) -> v
+    // render with the types the scan configured (its cql/keyType/
+    // columnType options, as SSTable2Json does) plus a valueType
+    // render option, case-insensitive like DSv2, so old_line/new_line
+    // match what writeAegJson emits for the same typed CF
+    val vt = options.collectFirst { case (k, v) if k.equalsIgnoreCase("valueType") => v }
+      .getOrElse("BytesType")
+    def lines(dir: String) = {
+      val atoms = readAtoms(spark, dir, options)
+      aegJsonLines(compact(atoms, rowCounter = Some(acc)),
+        keyType = configuredKeyType(atoms).fold("BytesType")(_.typeName),
+        nameType = configuredColumnType(atoms).fold("BytesType")(_.typeName),
+        valueType = vt).toDF("key", "line")
     }
-    val kt = opts.getOrElse("keytype", "BytesType")
-    val nt = opts.getOrElse("columntype", "BytesType")
-    val vt = opts.getOrElse("valuetype", "BytesType")
-    def lines(dir: String) =
-      aegJsonLines(compact(readAtoms(spark, dir, options), rowCounter = Some(acc)),
-        keyType = kt, nameType = nt, valueType = vt).toDF("key", "line")
     lines(oldDir).select(col("key"), col("line").as("old_line"))
       .join(lines(newDir).select(col("key"), col("line").as("new_line")),
         Seq("key"), "full_outer")

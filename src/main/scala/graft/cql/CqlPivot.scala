@@ -3,7 +3,7 @@ package graft.cql
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
-import graft.sstable.{CellOut, CompactedRow, SSTableWriter}
+import graft.sstable.{CassType, CellOut, CompactedRow, SSTableWriter}
 import graft.sstable.CassType.CompositeType
 
 /** Relational pivot of compacted CQL3 rows (SURVEY §3.2): one output
@@ -78,7 +78,7 @@ object CqlPivot {
       } else if (comps.length >= nCk + 1) {
         val ck = comps.take(nCk)
         val colId = new String(comps(nCk), "UTF-8")
-        val ckKey = ck.map(graft.sstable.CassType.hex).mkString("|")
+        val ckKey = ck.map(CassType.hex).mkString("|")
         val g = groups.getOrElseUpdate(ckKey, Group(ck, mutable.LinkedHashMap()))
         if (colId.nonEmpty) { // empty id = CQL3 row marker — grouping only
           val collKey = if (comps.length > nCk + 1) comps(nCk + 1) else Array.emptyByteArray
@@ -95,9 +95,9 @@ object CqlPivot {
       cells match {
         case None => null
         case Some(cs) => col.tpe match {
-          case CqlType.CList(elem) => cs.map { case (_, c) => elem.compose(c.value) }.toSeq
-          case CqlType.CSet(elem) => cs.map { case (k, _) => elem.compose(k) }.toSeq
-          case CqlType.CMap(k, v) => cs.map { case (kk, c) => k.compose(kk) -> v.compose(c.value) }.toMap
+          case CassType.ListType(elem) => cs.map { case (_, c) => elem.compose(c.value) }.toSeq
+          case CassType.SetType(elem) => cs.map { case (k, _) => elem.compose(k) }.toSeq
+          case CassType.MapType(k, v) => cs.map { case (kk, c) => k.compose(kk) -> v.compose(c.value) }.toMap
           case t if cs.last._2.value.isEmpty => null
           case t => t.compose(cs.last._2.value)
         }

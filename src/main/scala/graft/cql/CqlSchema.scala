@@ -1,129 +1,12 @@
 package graft.cql
 
-import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{StructField, StructType}
+import graft.sstable.CassType
 
-/** CQL value types: binary composition (`AbstractType.compose`) plus
-  * the Spark schema mapping, following the reference's Hive-friendly
-  * special cases (`org/coursera/mapreducer/CQLMapper.java:159-189`):
-  * uuid/timeuuid → string, blob → bytes, timestamp → epoch millis. */
-sealed trait CqlType {
-  def sparkType: DataType
-  def compose(bytes: Array[Byte]): Any
-}
-
-object CqlType {
-  case object CInt extends CqlType {
-    val sparkType: DataType = IntegerType
-    def compose(b: Array[Byte]): Any = ByteBuffer.wrap(b).getInt
-  }
-  case object CBigint extends CqlType {
-    val sparkType: DataType = LongType
-    def compose(b: Array[Byte]): Any = ByteBuffer.wrap(b).getLong
-  }
-  case object CText extends CqlType {
-    val sparkType: DataType = StringType
-    def compose(b: Array[Byte]): Any = new String(b, StandardCharsets.UTF_8)
-  }
-  case object CAscii extends CqlType {
-    val sparkType: DataType = StringType
-    def compose(b: Array[Byte]): Any = new String(b, StandardCharsets.US_ASCII)
-  }
-  case object CBlob extends CqlType {
-    val sparkType: DataType = BinaryType
-    def compose(b: Array[Byte]): Any = b
-  }
-  case object CUuid extends CqlType {
-    val sparkType: DataType = StringType
-    def compose(b: Array[Byte]): Any = {
-      val bb = ByteBuffer.wrap(b)
-      new java.util.UUID(bb.getLong, bb.getLong).toString
-    }
-  }
-  /** timeuuid: same rendering as uuid, but a distinct case so the
-    * marshal-comparator derivation keeps time ordering. */
-  case object CTimeUuid extends CqlType {
-    val sparkType: DataType = StringType
-    def compose(b: Array[Byte]): Any = CUuid.compose(b)
-  }
-  case object CTimestamp extends CqlType {
-    val sparkType: DataType = LongType // epoch millis, like the reference
-    def compose(b: Array[Byte]): Any = ByteBuffer.wrap(b).getLong
-  }
-  case object CDouble extends CqlType {
-    val sparkType: DataType = DoubleType
-    def compose(b: Array[Byte]): Any = ByteBuffer.wrap(b).getDouble
-  }
-  case object CFloat extends CqlType {
-    val sparkType: DataType = FloatType
-    def compose(b: Array[Byte]): Any = ByteBuffer.wrap(b).getFloat
-  }
-  case object CBoolean extends CqlType {
-    val sparkType: DataType = BooleanType
-    def compose(b: Array[Byte]): Any = b.nonEmpty && b(0) != 0
-  }
-  /** Collections — the reference rejects these
-    * (`CQLMapper.java:150-153`); we support them as a deliberate
-    * superset (SURVEY §1.3). */
-  final case class CList(elem: CqlType) extends CqlType {
-    val sparkType: DataType = ArrayType(elem.sparkType)
-    def compose(b: Array[Byte]): Any = throw new UnsupportedOperationException
-  }
-  final case class CSet(elem: CqlType) extends CqlType {
-    val sparkType: DataType = ArrayType(elem.sparkType)
-    def compose(b: Array[Byte]): Any = throw new UnsupportedOperationException
-  }
-  final case class CMap(k: CqlType, v: CqlType) extends CqlType {
-    val sparkType: DataType = MapType(k.sparkType, v.sparkType)
-    def compose(b: Array[Byte]): Any = throw new UnsupportedOperationException
-  }
-
-  def parse(s: String): CqlType = {
-    val t = s.trim.toLowerCase
-    val lt = t.indexOf('<')
-    if (lt >= 0) {
-      val base = t.substring(0, lt)
-      val inner = t.substring(lt + 1, t.lastIndexOf('>'))
-      val args = splitTop(inner).map(parse)
-      base match {
-        case "list" => CList(args.head)
-        case "set" => CSet(args.head)
-        case "map" => CMap(args.head, args(1))
-        case other => throw new IllegalArgumentException(s"Unknown CQL type $other<...>")
-      }
-    } else t match {
-      case "int" | "varint" => CInt
-      case "bigint" | "counter" => CBigint
-      case "text" | "varchar" => CText
-      case "ascii" => CAscii
-      case "blob" => CBlob
-      case "uuid" => CUuid
-      case "timeuuid" => CTimeUuid
-      case "timestamp" => CTimestamp
-      case "double" => CDouble
-      case "float" => CFloat
-      case "boolean" => CBoolean
-      case other => throw new IllegalArgumentException(s"Unknown CQL type $other")
-    }
-  }
-
-  private[cql] def splitTop(s: String): List[String] = {
-    val out = List.newBuilder[String]
-    var depth = 0
-    val cur = new StringBuilder
-    s.foreach { c =>
-      if (c == '<' || c == '(') depth += 1
-      if (c == '>' || c == ')') depth -= 1
-      if (c == ',' && depth == 0) { out += cur.toString; cur.clear() }
-      else cur.append(c)
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-}
-
-final case class CqlColumn(name: String, tpe: CqlType, isStatic: Boolean)
+/** A CQL column, typed by its Cassandra marshal type: the one type
+  * both orders it inside a key comparator and decodes its values in
+  * the pivot ([[CassType.compose]], [[CassType.sparkType]]). */
+final case class CqlColumn(name: String, tpe: CassType, isStatic: Boolean)
 
 /** Parsed CREATE TABLE: the schema-as-config entry point (SURVEY §1.4)
   * — replaces the reference's Cassandra `CreateTableStatement` parse
@@ -145,20 +28,18 @@ final case class CqlTable(
   /** Partition-key marshal validator (the reference's
     * `CFMetadataUtility`-derived `aegisthus.keytype`): single type, or
     * a composite over the partition-key columns. */
-  def keyMarshal: graft.sstable.CassType = partitionKeys match {
-    case Seq(single) => CqlTable.marshalOf(single.tpe)
-    case many => graft.sstable.CassType.CompositeType(many.map(c => CqlTable.marshalOf(c.tpe)))
+  def keyMarshal: CassType = partitionKeys match {
+    case Seq(single) => single.tpe
+    case many => CassType.CompositeType(many.map(_.tpe))
   }
 
   /** CQL3 cell-name comparator (`aegisthus.columntype`): a composite
     * of the clustering-key marshal types (ReversedType-wrapped for
     * `CLUSTERING ORDER BY (... DESC)` keys) plus the trailing UTF8
     * column-identifier component. */
-  def comparatorMarshal: graft.sstable.CassType = {
-    import graft.sstable.CassType
+  def comparatorMarshal: CassType = {
     val ckTypes = clusteringKeys.map { c =>
-      val base = CqlTable.marshalOf(c.tpe)
-      if (descClustering(c.name)) CassType.ReversedType(base) else base
+      if (descClustering(c.name)) CassType.ReversedType(c.tpe) else c.tpe
     }
     CassType.CompositeType(ckTypes :+ CassType.UTF8Type)
   }
@@ -166,23 +47,33 @@ final case class CqlTable(
 
 object CqlTable {
 
-  /** CQL value type -> Cassandra marshal type. Collections fall back
-    * to BytesType (their cell names are comparator-encoded already). */
-  def marshalOf(t: CqlType): graft.sstable.CassType = {
-    import graft.sstable.CassType._
-    t match {
-      case CqlType.CInt => Int32Type
-      case CqlType.CBigint => LongType
-      case CqlType.CText => UTF8Type
-      case CqlType.CAscii => AsciiType
-      case CqlType.CBlob => BytesType
-      case CqlType.CUuid => UUIDType
-      case CqlType.CTimeUuid => TimeUUIDType
-      case CqlType.CTimestamp => TimestampType
-      case CqlType.CDouble => DoubleType
-      case CqlType.CFloat => FloatType
-      case CqlType.CBoolean => BooleanType
-      case _ => BytesType
+  /** CQL type name -> Cassandra marshal type (Cassandra's
+    * `CQL3Type.Native`). `counter` values decode as 8-byte longs. */
+  private val NativeTypes: Map[String, CassType] = {
+    import CassType._
+    Map(
+      "int" -> Int32Type, "varint" -> IntegerType,
+      "bigint" -> LongType, "counter" -> LongType,
+      "smallint" -> ShortType, "tinyint" -> ByteType,
+      "text" -> UTF8Type, "varchar" -> UTF8Type, "ascii" -> AsciiType,
+      "blob" -> BytesType, "uuid" -> UUIDType, "timeuuid" -> TimeUUIDType,
+      "timestamp" -> TimestampType, "double" -> DoubleType, "float" -> FloatType,
+      "boolean" -> BooleanType, "decimal" -> DecimalType, "inet" -> InetAddressType)
+  }
+
+  /** a native CQL type name, or `list<e>`, `set<e>`, `map<k,v>`. */
+  private def parseType(s: String): CassType = {
+    val t = s.trim.toLowerCase
+    val lt = t.indexOf('<')
+    if (lt < 0) NativeTypes.getOrElse(t, throw new IllegalArgumentException(s"Unknown CQL type $t"))
+    else {
+      val args = CassType.splitTop(t.substring(lt + 1, t.lastIndexOf('>'))).map(parseType)
+      t.substring(0, lt) match {
+        case "list" => CassType.ListType(args.head)
+        case "set" => CassType.SetType(args.head)
+        case "map" => CassType.MapType(args.head, args(1))
+        case other => throw new IllegalArgumentException(s"Unknown CQL type $other<...>")
+      }
     }
   }
 
@@ -208,7 +99,7 @@ object CqlTable {
         (m.group(1).replace("\"", ""), cql.substring(m.end, i - 1))
       case None => throw new IllegalArgumentException(s"Cannot parse CQL: $cql")
     }
-    val parts = CqlType.splitTop(body)
+    val parts = CassType.splitTop(body)
     var pkSpec: Option[String] = None
     val cols = Vector.newBuilder[(CqlColumn, Boolean)] // (col, inlinePk)
     parts.foreach { p =>
@@ -222,7 +113,7 @@ object CqlTable {
         val cleaned = core.replaceAll("(?i)primary\\s+key", "").trim
         val sp = cleaned.indexOf(' ')
         val name = cleaned.substring(0, sp).replace("\"", "")
-        val tpe = CqlType.parse(cleaned.substring(sp + 1))
+        val tpe = parseType(cleaned.substring(sp + 1))
         cols += ((CqlColumn(name, tpe, isStatic), inlinePk))
       }
     }
@@ -233,9 +124,9 @@ object CqlTable {
       case Some(spec) =>
         // ((a, b), c, d) or (a, c, d)
         val inner = spec.trim.stripPrefix("(").stripSuffix(")")
-        val tops = CqlType.splitTop(inner)
+        val tops = CassType.splitTop(inner)
         if (tops.head.startsWith("(")) {
-          val pks = CqlType.splitTop(tops.head.stripPrefix("(").stripSuffix(")"))
+          val pks = CassType.splitTop(tops.head.stripPrefix("(").stripSuffix(")"))
           (pks, tops.tail)
         } else (Seq(tops.head), tops.tail)
       case None =>
@@ -252,7 +143,7 @@ object CqlTable {
     // WITH CLUSTERING ORDER BY (ck DESC, ...) — DESC keys compact in
     // reversed comparator order (ReversedType in the comparator)
     val desc = ClusteringOrderRe.findFirstMatchIn(cql).map { m =>
-      CqlType.splitTop(m.group(1)).flatMap { entry =>
+      CassType.splitTop(m.group(1)).flatMap { entry =>
         val ps = entry.trim.split("\\s+")
         if (ps.length >= 2 && ps(1).equalsIgnoreCase("desc"))
           Some(ps(0).replace("\"", "")) else None

@@ -2,14 +2,26 @@ package graft.sstable
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.{types => sql}
 
 /** Minimal clean-room Cassandra marshal-type system (SURVEY §2.8 X1/X2):
   * parse type-name strings and render byte values as display strings,
   * mirroring `AbstractType.getString` behavior for the types the
   * reference exercises (`output/JsonOutputFormat.java:49-60,92-106`).
-  * BytesType (the default everywhere) renders lowercase hex. */
+  * BytesType (the default everywhere) renders lowercase hex. The same
+  * types type the columns of a CQL table ([[graft.cql.CqlTable]]):
+  * they order its keys and decode its values ([[compose]]). */
 sealed trait CassType {
   def getString(bytes: Array[Byte]): String
+  /** Spark type of [[compose]]'s value: the column type of the CQL
+    * pivot's relational schema. */
+  def sparkType: sql.DataType = sql.StringType
+  /** the value the CQL pivot puts in a `Row` (`AbstractType.compose`).
+    * The default is the rendered string, lossless at any length; types
+    * with a native Spark counterpart override both, following the
+    * reference's Hive-friendly mapping
+    * (`org/coursera/mapreducer/CQLMapper.java:159-189`). */
+  def compose(bytes: Array[Byte]): Any = getString(bytes)
   /** comparator used for column-name ordering (O1). */
   def compare(a: Array[Byte], b: Array[Byte]): Int = CassType.unsignedCompare(a, b)
   /** Order-preserving binary encoding:
@@ -133,6 +145,8 @@ object CassType {
 
   case object BytesType extends CassType {
     override def getString(bytes: Array[Byte]): String = hex(bytes)
+    override def sparkType: sql.DataType = sql.BinaryType
+    override def compose(bytes: Array[Byte]): Any = bytes
   }
   case object UTF8Type extends CassType {
     override def getString(bytes: Array[Byte]): String = new String(bytes, StandardCharsets.UTF_8)
@@ -147,6 +161,8 @@ object CassType {
       java.lang.Long.compare(ByteBuffer.wrap(a).getLong, ByteBuffer.wrap(b).getLong)
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.length < 8) bytes else signedLongKey(ByteBuffer.wrap(bytes).getLong)
+    override def sparkType: sql.DataType = sql.LongType
+    override def compose(bytes: Array[Byte]): Any = ByteBuffer.wrap(bytes).getLong
   }
   case object Int32Type extends CassType {
     override def getString(bytes: Array[Byte]): String =
@@ -155,6 +171,8 @@ object CassType {
       java.lang.Integer.compare(ByteBuffer.wrap(a).getInt, ByteBuffer.wrap(b).getInt)
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.length < 4) bytes else signedIntKey(ByteBuffer.wrap(bytes).getInt)
+    override def sparkType: sql.DataType = sql.IntegerType
+    override def compose(bytes: Array[Byte]): Any = ByteBuffer.wrap(bytes).getInt
   }
   case object UUIDType extends CassType {
     override def getString(bytes: Array[Byte]): String = {
@@ -189,6 +207,8 @@ object CassType {
   case object BooleanType extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else (bytes(0) != 0).toString
+    override def sparkType: sql.DataType = sql.BooleanType
+    override def compose(bytes: Array[Byte]): Any = bytes.nonEmpty && bytes(0) != 0
   }
   case object FloatType extends CassType {
     override def getString(bytes: Array[Byte]): String =
@@ -204,6 +224,8 @@ object CassType {
       val k = if (bits < 0) ~bits else bits ^ Int.MinValue
       Array((k >>> 24).toByte, (k >>> 16).toByte, (k >>> 8).toByte, k.toByte)
     }
+    override def sparkType: sql.DataType = sql.FloatType
+    override def compose(bytes: Array[Byte]): Any = ByteBuffer.wrap(bytes).getFloat
   }
   case object DoubleType extends CassType {
     override def getString(bytes: Array[Byte]): String =
@@ -219,9 +241,14 @@ object CassType {
       while (i < 8) { out(i) = (k >>> (56 - 8 * i)).toByte; i += 1 }
       out
     }
+    override def sparkType: sql.DataType = sql.DoubleType
+    override def compose(bytes: Array[Byte]): Any = ByteBuffer.wrap(bytes).getDouble
   }
+  /** composes to epoch millis, as the reference does. */
   case object TimestampType extends CassType {
     override def getString(bytes: Array[Byte]): String = LongType.getString(bytes)
+    override def sparkType: sql.DataType = sql.LongType
+    override def compose(bytes: Array[Byte]): Any = LongType.compose(bytes)
   }
   case object ShortType extends CassType {
     override def getString(bytes: Array[Byte]): String =
@@ -231,6 +258,8 @@ object CassType {
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.length < 2) bytes
       else Array(((bytes(0) ^ 0x80) & 0xff).toByte, bytes(1))
+    override def sparkType: sql.DataType = sql.ShortType
+    override def compose(bytes: Array[Byte]): Any = ByteBuffer.wrap(bytes).getShort
   }
   case object ByteType extends CassType {
     override def getString(bytes: Array[Byte]): String =
@@ -239,6 +268,8 @@ object CassType {
       java.lang.Byte.compare(a(0), b(0))
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.isEmpty) bytes else Array(((bytes(0) ^ 0x80) & 0xff).toByte)
+    override def sparkType: sql.DataType = sql.ByteType
+    override def compose(bytes: Array[Byte]): Any = bytes(0)
   }
   /** Cassandra `IntegerType` is the arbitrary-precision varint
     * (two's-complement minimal big-endian bytes). */
@@ -283,6 +314,29 @@ object CassType {
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       invert(escapeTerminate(base.sortKey(bytes)))
     override def typeName: String = s"ReversedType(${base.typeName})"
+  }
+
+  /** CQL collections (`list<e>`, `set<e>`, `map<k,v>`): a collection
+    * is one cell per element, so the CQL pivot composes its elements
+    * cell by cell; a whole value renders as hex. The reference rejects
+    * collections (`CQLMapper.java:150-153`); supporting them is a
+    * deliberate superset (SURVEY §1.3). */
+  sealed trait CollectionType extends CassType {
+    override def getString(bytes: Array[Byte]): String = hex(bytes)
+    override def compose(bytes: Array[Byte]): Any =
+      throw new UnsupportedOperationException(s"$typeName composes per element cell")
+  }
+  final case class ListType(elem: CassType) extends CollectionType {
+    override def sparkType: sql.DataType = sql.ArrayType(elem.sparkType)
+    override def typeName: String = s"ListType(${elem.typeName})"
+  }
+  final case class SetType(elem: CassType) extends CollectionType {
+    override def sparkType: sql.DataType = sql.ArrayType(elem.sparkType)
+    override def typeName: String = s"SetType(${elem.typeName})"
+  }
+  final case class MapType(key: CassType, value: CassType) extends CollectionType {
+    override def sparkType: sql.DataType = sql.MapType(key.sparkType, value.sparkType)
+    override def typeName: String = s"MapType(${key.typeName},${value.typeName})"
   }
 
   /** CompositeType: components encoded as [u16 len][bytes][u8 eoc]...;
@@ -379,7 +433,7 @@ object CassType {
     val trimmed = name.trim.stripPrefix("org.apache.cassandra.db.marshal.")
     val paren = trimmed.indexOf('(')
     val base = if (paren >= 0) trimmed.substring(0, paren) else trimmed
-    val args = if (paren >= 0) splitArgs(trimmed.substring(paren + 1, trimmed.lastIndexOf(')'))) else Nil
+    val args = if (paren >= 0) splitTop(trimmed.substring(paren + 1, trimmed.lastIndexOf(')'))) else Nil
     base match {
       case "BytesType" => BytesType
       case "UTF8Type" => UTF8Type
@@ -400,19 +454,25 @@ object CassType {
       case "DoubleType" => DoubleType
       case "ReversedType" => ReversedType(parse(args.head))
       case "CompositeType" => CompositeType(args.map(parse))
+      case "ListType" => ListType(parse(args.head))
+      case "SetType" => SetType(parse(args.head))
+      case "MapType" => MapType(parse(args.head), parse(args(1)))
       case other => throw new IllegalArgumentException(s"Unsupported Cassandra type: $other")
     }
   }
 
-  private def splitArgs(s: String): List[String] = {
+  /** Split on the commas outside any `<>` or `()` nesting: the
+    * arguments of a marshal type (`CompositeType(A, B)`) or of a CQL
+    * collection (`map<k, v>`), and the column list of a CQL DDL. */
+  def splitTop(s: String): List[String] = {
     val out = List.newBuilder[String]
     var depth = 0
     val cur = new StringBuilder
     s.foreach {
       case ',' if depth == 0 => out += cur.toString; cur.clear()
       case c =>
-        if (c == '(') depth += 1
-        if (c == ')') depth -= 1
+        if (c == '<' || c == '(') depth += 1
+        if (c == '>' || c == ')') depth -= 1
         cur.append(c)
     }
     if (cur.nonEmpty) out += cur.toString

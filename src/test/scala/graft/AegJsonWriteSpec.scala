@@ -112,4 +112,10 @@ class AegJsonWriteSpec extends AnyFunSuite {
     assert(e.getMessage.contains("INCOMPATIBLE_DATA_FOR_TABLE")
       || e.getMessage.contains("aegjson write expects schema"))
   }
+
+  test("aegJsonLines rejects a bad type name when called, before any action") {
+    import spark.implicits._
+    val rows = spark.createDataset(Seq.empty[graft.sstable.CompactedRow])
+    intercept[IllegalArgumentException](GraftSSTable.aegJsonLines(rows, nameType = "NopeType"))
+  }
 }

@@ -57,4 +57,15 @@ class CassTypesSpec extends AnyFunSuite {
     assert(comp.compare(enc(1, "zzz"), enc(2, "aaa")) < 0)
     assert(comp.compare(enc(2, "aaa"), enc(2, "abc")) < 0)
   }
+
+  test("collection types round-trip through typeName and render hex") {
+    import CassType._
+    Seq(ListType(Int32Type), SetType(UTF8Type), MapType(UTF8Type, LongType),
+      MapType(TimeUUIDType, ListType(ReversedType(DoubleType)))).foreach { t =>
+      assert(CassType.parse(t.typeName) == t, t.typeName)
+    }
+    assert(CassType.parse("org.apache.cassandra.db.marshal.ListType(" +
+      "org.apache.cassandra.db.marshal.Int32Type)") == ListType(Int32Type))
+    assert(SetType(UTF8Type).getString(b(0, 1, 0xab)) == "0001ab")
+  }
 }

@@ -1,13 +1,17 @@
 package graft
 
+import java.math.BigInteger
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cql.{CqlPivot, CqlTable}
+import graft.sstable.CassType.CompositeType
 import graft.sstable.{CellOut, CompactedRow, SSTableFormat, SSTableVersion, SSTableWriter}
 
 /** CQL relational pivot (M4) against the reference fixtures whose
   * decoded goldens are known (FIXTURES.md §1.1-1.2), plus synthetic
-  * static-column and collection cases. */
+  * static-column, collection and per-type decoding cases. */
 class CqlPivotSpec extends AnyFunSuite {
   private val testRoot = "/root/reference/aegisthus-hadoop/src/test/resources/testdata"
 
@@ -213,5 +217,100 @@ class CqlPivotSpec extends AnyFunSuite {
 
     // uncapped default still pivots everything
     assert(CqlPivot.pivot(ds, cql).count() == 201L)
+  }
+
+  // helpers of the per-type tests below: CQL3 composite names, values
+  private def comp(parts: Array[Byte]*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    parts.foreach { p =>
+      out.write(p.length >> 8); out.write(p.length & 0xff)
+      out.write(p); out.write(0)
+    }
+    out.toByteArray
+  }
+  private def utf8(x: String): Array[Byte] = x.getBytes("UTF-8")
+  private def int32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+  private def varint(v: BigInt): Array[Byte] = v.bigInteger.toByteArray
+  private def column(name: Array[Byte], value: Array[Byte]) =
+    CellOut(SSTableFormat.KindColumn, name, value, 10L, None, None, None)
+  /** one CQL row: its row marker plus one cell per regular column. */
+  private def cqlRow(ck: Array[Byte], values: (String, Array[Byte])*): Seq[CellOut] =
+    column(comp(ck, Array.emptyByteArray), Array.emptyByteArray) +:
+      values.map { case (c, v) => column(comp(ck, utf8(c)), v) }
+
+  test("varint values decode at any length (1 and 5 bytes), as strings") {
+    import spark.implicits._
+    assert(varint(5).length == 1 && varint(BigInt(1) << 31).length == 5)
+    val row = CompactedRow(int32(1), Long.MinValue,
+      cqlRow(int32(1), "v" -> varint(5)) ++ cqlRow(int32(2), "v" -> varint(BigInt(1) << 31)))
+    val df = CqlPivot.pivot(spark.createDataset(Seq(row)),
+      "CREATE TABLE t (pk int, ck int, v varint, PRIMARY KEY (pk, ck))")
+    assert(df.schema("v").dataType == StringType)
+    val got = df.collect().map(r => r.getAs[Int]("ck") -> r.getAs[String]("v")).sortBy(_._1).toSeq
+    assert(got == Seq(1 -> "5", 2 -> "2147483648"))
+  }
+
+  test("a varint clustering key compacts in numeric order and pivots every row") {
+    val dir = java.nio.file.Files.createTempDirectory("cql-varint").toFile
+    try {
+      def sstable(gen: Int, cks: BigInt*): Unit = {
+        val f = new java.io.DataOutputStream(new java.io.FileOutputStream(
+          new java.io.File(dir, s"ks-t-jb-$gen-Data.db")))
+        val cells = cks.flatMap(ck => cqlRow(varint(ck), "v" -> utf8(s"v$ck")))
+        SSTableWriter.writeRow(f, CompactedRow(utf8("p1"), Long.MinValue, cells), SSTableVersion("jb"))
+        f.close()
+      }
+      // out of numeric order within and across files; byte order
+      // (ff, 05, 012c, 0080000000) differs from numeric order too
+      sstable(1, 300, -1)
+      sstable(2, BigInt(1) << 31, 5)
+      val cql = "CREATE TABLE ks.t (pk text, ck varint, v text, PRIMARY KEY (pk, ck))"
+      val atoms = GraftSSTable.readAtoms(spark, dir.toString, Map("cql" -> cql))
+      val compacted = GraftSSTable.compact(atoms, numPartitions = 2)
+      val cks = compacted.collect().toSeq.flatMap(_.columns)
+        .map(c => CompositeType.split(c.name).head).filter(_.nonEmpty)
+        .map(b => BigInt(new BigInteger(b))).distinct
+      assert(cks == Seq(BigInt(-1), BigInt(5), BigInt(300), BigInt(1) << 31))
+      val rows = GraftSSTable.pivotToRelational(compacted, cql).collect()
+        .map(r => (r.getAs[String]("ck"), r.getAs[String]("v"))).toSeq
+      assert(rows == Seq("-1" -> "v-1", "5" -> "v5", "300" -> "v300", "2147483648" -> "v2147483648"))
+    } finally TestUtil.deleteRecursively(dir)
+  }
+
+  test("the Spark schema of every CQL type is pinned") {
+    val t = CqlTable.parse(
+      """CREATE TABLE ks.all_types (k int, vi varint, bi bigint, cn counter,
+        |tx text, vc varchar, asc ascii, bl blob, id uuid, tid timeuuid,
+        |ts timestamp, d double, f float, b boolean,
+        |l list<int>, s set<text>, m map<text, bigint>, PRIMARY KEY (k))""".stripMargin)
+    assert(t.sparkSchema == StructType(Seq(
+      StructField("k", IntegerType), StructField("vi", StringType),
+      StructField("bi", LongType), StructField("cn", LongType),
+      StructField("tx", StringType), StructField("vc", StringType),
+      StructField("asc", StringType), StructField("bl", BinaryType),
+      StructField("id", StringType), StructField("tid", StringType),
+      StructField("ts", LongType), StructField("d", DoubleType),
+      StructField("f", FloatType), StructField("b", BooleanType),
+      StructField("l", ArrayType(IntegerType)), StructField("s", ArrayType(StringType)),
+      StructField("m", MapType(StringType, LongType)))))
+  }
+
+  test("smallint, tinyint, decimal and inet values pivot") {
+    import spark.implicits._
+    val short = java.nio.ByteBuffer.allocate(2).putShort((-1234).toShort).array()
+    // decimal: [i32 scale][varint unscaled] -> 12345 x 10^-3
+    val decimal = int32(3) ++ varint(12345)
+    val inet = Array[Byte](10, 0, 0, 1)
+    val row = CompactedRow(int32(1), Long.MinValue,
+      cqlRow(int32(1), "sm" -> short, "ti" -> Array[Byte](-7), "de" -> decimal, "ip" -> inet))
+    val df = CqlPivot.pivot(spark.createDataset(Seq(row)),
+      """CREATE TABLE t (pk int, ck int, sm smallint, ti tinyint, de decimal, ip inet,
+        |PRIMARY KEY (pk, ck))""".stripMargin)
+    assert(df.schema.map(_.dataType).drop(2) == Seq(ShortType, ByteType, StringType, StringType))
+    val r = df.collect().head
+    assert(r.getAs[Short]("sm") == -1234)
+    assert(r.getAs[Byte]("ti") == -7)
+    assert(r.getAs[String]("de") == "12.345")
+    assert(r.getAs[String]("ip") == "10.0.0.1")
   }
 }

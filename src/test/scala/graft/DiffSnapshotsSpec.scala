@@ -46,4 +46,27 @@ class DiffSnapshotsSpec extends AnyFunSuite {
       s"rowsWritten must cover both sides, got ${GraftSSTable.rowsWritten.map(_.value)}")
     TestUtil.deleteRecursively(root)
   }
+
+  test("a cql-configured scan renders keys and composite names with the table's types") {
+    val root = java.nio.file.Files.createTempDirectory("graft_diff_cql").toFile
+    def comp(parts: Array[Byte]*): Array[Byte] = parts.flatMap { p =>
+      Array((p.length >> 8).toByte, p.length.toByte) ++ p :+ 0.toByte
+    }.toArray
+    def cell(ck: Int, v: String, ts: Long) = CellOut(SSTableFormat.KindColumn,
+      comp(java.nio.ByteBuffer.allocate(4).putInt(ck).array(), "v".getBytes), v.getBytes, ts,
+      None, None, None)
+    writeFixture(new java.io.File(root, "old/ks-t-jb-1-Data.db"), Seq(
+      CompactedRow("k1".getBytes, Long.MinValue, Seq(cell(7, "a", 10L)))))
+    writeFixture(new java.io.File(root, "new/ks-t-jb-1-Data.db"), Seq(
+      CompactedRow("k1".getBytes, Long.MinValue, Seq(cell(7, "a2", 20L)))))
+    try {
+      val diff = GraftSSTable.diffSnapshots(spark, s"$root/old", s"$root/new",
+        Map("cql" -> "CREATE TABLE ks.t (pk text, ck int, v text, PRIMARY KEY (pk, ck))"))
+      val Array(r) = diff.collect()
+      assert(r.getString(1) == "changed")
+      val oldLine = r.getString(2)
+      assert(oldLine.startsWith("k1\t{\"k1\":"), s"UTF8Type key must render as text: $oldLine")
+      assert(oldLine.contains("[\"(7, v)\",\"61\",10]"), s"composite name must render typed: $oldLine")
+    } finally TestUtil.deleteRecursively(root)
+  }
 }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The SSTable core states each decision once: one micro-batch stream
   * serves both file-set sources, only [[graft.sstable.TaskCommit]]
   * (plus distcp's per-file copy commit) makes a written file visible,
-  * and only [[graft.sstable.Compaction]] applies the merge rules. */
+  * only [[graft.sstable.Compaction]] applies the merge rules, and only
+  * [[graft.sstable.CassType]] types and decodes a value. */
 class StatedOnceSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -39,5 +40,21 @@ class StatedOnceSpec extends AnyFunSuite {
     }.sorted
     assert(readers == Seq("scala/graft/sstable/Compaction.scala", "scala/graft/sstable/SSTableSource.scala"),
       s".rtMax read in $readers")
+  }
+
+  test("CQL columns decode only through CassType: no type ADT or ByteBuffer under cql/") {
+    val cql = mainSources.filter(_._1.startsWith("scala/graft/cql/"))
+    assert(cql.nonEmpty)
+    val offenders = cql.collect {
+      case (f, text) if text.contains("sealed trait") || text.contains("ByteBuffer") => f
+    }
+    assert(offenders.isEmpty, s"a second type system in $offenders")
+  }
+
+  test("exactly one type-argument splitter in src/main") {
+    // a splitter cuts at the commas outside any nesting
+    val split = raw"(','.*depth\s*==\s*0|depth\s*==\s*0.*',')".r
+    val found = mainSources.flatMap { case (f, text) => split.findAllIn(text).map(_ => f) }
+    assert(found == Seq("scala/graft/sstable/CassTypes.scala"), s"splitters: $found")
   }
 }
