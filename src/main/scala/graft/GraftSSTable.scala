@@ -16,8 +16,9 @@ import graft.sstable._
   * The physical plan mirrors the reference's MR pipeline Spark-first:
   * custom DSv2 scan → `repartition(key)` (hash partitioning, O3) →
   * `sortWithinPartitions(key, name, ts)` (secondary sort, O1) →
-  * `mapPartitions` streaming merge (A1) — bounded memory per row,
-  * no collect_list, safe for wide rows at 100 TB.
+  * `mapPartitions` streaming merge (A1), no collect_list. Rows stream,
+  * but a row's surviving cells are buffered until the row ends: only
+  * `maxRowSize` bounds a wide row, by dropping the cells past it.
   */
 object GraftSSTable {
 
@@ -55,8 +56,8 @@ object GraftSSTable {
     *                       `AegisthusKeySortingComparator.java:35-61`):
     *                       the shuffle sort orders names by a
     *                       binary-comparable sort key derived per type
-    *                       ([[CassType.sortKey]]) and the merge uses
-    *                       the same comparator for range-tombstone
+    *                       ([[CassType.sortKey]]) and the merge
+    *                       compares the same keys for range-tombstone
     *                       coverage and LWW adjacency
     * @param numPartitions  <= 0 (default) takes the session's
     *                       `spark.sql.shuffle.partitions` — the real

@@ -22,15 +22,16 @@ sealed trait CassType {
     * reference's Hive-friendly mapping
     * (`org/coursera/mapreducer/CQLMapper.java:159-189`). */
   def compose(bytes: Array[Byte]): Any = getString(bytes)
-  /** comparator used for column-name ordering (O1). */
-  def compare(a: Array[Byte], b: Array[Byte]): Int = CassType.unsignedCompare(a, b)
-  /** Order-preserving binary encoding:
-    * `sign(unsignedCompare(sortKey(a), sortKey(b))) == sign(compare(a, b))`.
-    * Lets the distributed compaction shuffle sort column names with
-    * Spark's native BinaryType ordering while honoring any configured
-    * comparator (the `aegisthus.columntype` analog — reference
-    * `AegisthusKeySortingComparator.java:35-61`). Identity for types
-    * whose comparator already IS unsigned-lexicographic. */
+  /** The type's order (O1, the `aegisthus.columntype` comparator —
+    * reference `AegisthusKeySortingComparator.java:35-61`), stated once
+    * as a binary encoding: names order as their sort keys do under
+    * unsigned byte comparison (`java.util.Arrays.compareUnsigned`, the
+    * order of Spark's BinaryType). The compaction shuffle sorts on these
+    * keys and the merge compares them for LWW adjacency and
+    * range-tombstone coverage; byte-distinct names with equal keys
+    * (Decimal 2.5 and 2.50) are one name. Identity for types ordered by
+    * their unsigned bytes; a name too short for its type keys as its
+    * raw bytes. */
   def sortKey(bytes: Array[Byte]): Array[Byte] = bytes
   /** canonical parseable name (inverse of [[CassType.parse]]). */
   def typeName: String = toString
@@ -48,17 +49,6 @@ object CassType {
       i += 1
     }
     sb.toString
-  }
-
-  def unsignedCompare(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val cmp = (a(i) & 0xff) - (b(i) & 0xff)
-      if (cmp != 0) return cmp
-      i += 1
-    }
-    a.length - b.length
   }
 
   /** 8-byte big-endian with the sign bit flipped — signed-long order
@@ -157,8 +147,6 @@ object CassType {
   case object LongType extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else ByteBuffer.wrap(bytes).getLong.toString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      java.lang.Long.compare(ByteBuffer.wrap(a).getLong, ByteBuffer.wrap(b).getLong)
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.length < 8) bytes else signedLongKey(ByteBuffer.wrap(bytes).getLong)
     override def sparkType: sql.DataType = sql.LongType
@@ -167,8 +155,6 @@ object CassType {
   case object Int32Type extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else ByteBuffer.wrap(bytes).getInt.toString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      java.lang.Integer.compare(ByteBuffer.wrap(a).getInt, ByteBuffer.wrap(b).getInt)
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.length < 4) bytes else signedIntKey(ByteBuffer.wrap(bytes).getInt)
     override def sparkType: sql.DataType = sql.IntegerType
@@ -180,23 +166,14 @@ object CassType {
       new java.util.UUID(bb.getLong, bb.getLong).toString
     }
   }
-  /** Time-ordered UUID comparison (version-1 timestamp first, then
-    * bytes) — Cassandra TimeUUIDType semantics. */
+  /** Time-ordered UUIDs (version-1 timestamp first, then bytes) —
+    * Cassandra TimeUUIDType semantics. */
   case object TimeUUIDType extends CassType {
     override def getString(bytes: Array[Byte]): String = UUIDType.getString(bytes)
-    override def compare(a: Array[Byte], b: Array[Byte]): Int = {
-      def ts(x: Array[Byte]): Long = {
-        val bb = ByteBuffer.wrap(x)
-        val msb = bb.getLong
-        // RFC 4122 v1: time_low(32) | time_mid(16) | ver(4)+time_hi(12)
-        ((msb & 0x0fffL) << 48) | (((msb >> 16) & 0xffffL) << 32) | (msb >>> 32)
-      }
-      val cmp = java.lang.Long.compare(ts(a), ts(b))
-      if (cmp != 0) cmp else unsignedCompare(a, b)
-    }
     override def sortKey(bytes: Array[Byte]): Array[Byte] = {
       if (bytes.length < 8) return bytes
       val msb = ByteBuffer.wrap(bytes).getLong
+      // RFC 4122 v1: time_low(32) | time_mid(16) | ver(4)+time_hi(12)
       val t = ((msb & 0x0fffL) << 48) | (((msb >> 16) & 0xffffL) << 32) | (msb >>> 32)
       // 60-bit timestamp is non-negative: plain unsigned BE, then the
       // raw bytes break ties (all TimeUUIDs are 16 bytes, so the
@@ -213,8 +190,6 @@ object CassType {
   case object FloatType extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else ByteBuffer.wrap(bytes).getFloat.toString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      java.lang.Float.compare(ByteBuffer.wrap(a).getFloat, ByteBuffer.wrap(b).getFloat)
     override def sortKey(bytes: Array[Byte]): Array[Byte] = {
       if (bytes.length < 4) return bytes
       // IEEE754 total-order trick matching Float.compare (canonical
@@ -230,8 +205,6 @@ object CassType {
   case object DoubleType extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else ByteBuffer.wrap(bytes).getDouble.toString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      java.lang.Double.compare(ByteBuffer.wrap(a).getDouble, ByteBuffer.wrap(b).getDouble)
     override def sortKey(bytes: Array[Byte]): Array[Byte] = {
       if (bytes.length < 8) return bytes
       val bits = java.lang.Double.doubleToLongBits(ByteBuffer.wrap(bytes).getDouble)
@@ -253,8 +226,6 @@ object CassType {
   case object ShortType extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else ByteBuffer.wrap(bytes).getShort.toString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      java.lang.Short.compare(ByteBuffer.wrap(a).getShort, ByteBuffer.wrap(b).getShort)
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.length < 2) bytes
       else Array(((bytes(0) ^ 0x80) & 0xff).toByte, bytes(1))
@@ -264,8 +235,6 @@ object CassType {
   case object ByteType extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else bytes(0).toString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      java.lang.Byte.compare(a(0), b(0))
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.isEmpty) bytes else Array(((bytes(0) ^ 0x80) & 0xff).toByte)
     override def sparkType: sql.DataType = sql.ByteType
@@ -276,8 +245,6 @@ object CassType {
   case object IntegerType extends CassType {
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else new java.math.BigInteger(bytes).toString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      new java.math.BigInteger(a).compareTo(new java.math.BigInteger(b))
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.isEmpty) bytes else varintKey(new java.math.BigInteger(bytes))
   }
@@ -292,8 +259,6 @@ object CassType {
     }
     override def getString(bytes: Array[Byte]): String =
       if (bytes.isEmpty) "" else decode(bytes).toPlainString
-    override def compare(a: Array[Byte], b: Array[Byte]): Int =
-      decode(a).compareTo(decode(b))
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
       if (bytes.length < 4) bytes else decimalKey(decode(bytes))
   }
@@ -303,12 +268,10 @@ object CassType {
   }
   case object EmptyType extends CassType {
     override def getString(bytes: Array[Byte]): String = ""
-    override def compare(a: Array[Byte], b: Array[Byte]): Int = 0
     override def sortKey(bytes: Array[Byte]): Array[Byte] = Array.emptyByteArray
   }
   final case class ReversedType(base: CassType) extends CassType {
     override def getString(bytes: Array[Byte]): String = base.getString(bytes)
-    override def compare(a: Array[Byte], b: Array[Byte]): Int = -base.compare(a, b)
     // escape+terminate makes variable-length keys safely invertible:
     // plain bit-inversion alone would NOT reverse prefix ordering
     override def sortKey(bytes: Array[Byte]): Array[Byte] =
@@ -356,24 +319,6 @@ object CassType {
         components.lift(i).getOrElse(BytesType).getString(c)
       }
       parts.mkString("(", ", ", ")")
-    }
-    override def compare(a: Array[Byte], b: Array[Byte]): Int = {
-      if (a.isEmpty || b.isEmpty) return a.length - b.length
-      val sa = CompositeType.isStatic(a)
-      if (sa != CompositeType.isStatic(b)) return if (sa) -1 else 1
-      val as = CompositeType.split(a); val bs = CompositeType.split(b)
-      val n = math.min(as.length, bs.length)
-      var i = 0
-      while (i < n) {
-        val x = as(i)
-        val y = bs(i)
-        val cmp =
-          if (x.isEmpty || y.isEmpty) x.length - y.length
-          else components.lift(i).getOrElse(BytesType).compare(x, y)
-        if (cmp != 0) return cmp
-        i += 1
-      }
-      as.length - bs.length
     }
     override def typeName: String =
       s"CompositeType(${components.map(_.typeName).mkString(",")})"

@@ -1,5 +1,6 @@
 package graft.sstable
 
+import java.util.Arrays.compareUnsigned
 import scala.collection.mutable.ArrayBuffer
 
 /** One surviving cell of a compacted row. */
@@ -16,10 +17,12 @@ final case class CellOut(
 final case class CompactedRow(key: Array[Byte], deletedAt: Long, columns: Seq[CellOut])
 
 /** Distributed-compaction merge (operator A1 + filters F1/F2/F3):
-  * single-pass, bounded-memory streaming merge over atoms sorted by
-  * (key, name, ts) — the faithful port of the reference's
-  * `CassSSTableReducer.RowReducer` (`mapreduce/CassSSTableReducer.java:120-192`)
-  * with Cassandra's `RangeTombstone.Tracker` semantics:
+  * single-pass streaming merge over atoms sorted by (key, name, ts) —
+  * the faithful port of the reference's `CassSSTableReducer.RowReducer`
+  * (`mapreduce/CassSSTableReducer.java:120-192`) with Cassandra's
+  * `RangeTombstone.Tracker` semantics. Rows stream; a row's surviving
+  * cells are buffered until the row ends, bounded only by `maxRowSize`,
+  * which drops the cells past it:
   *
   *  - row deletedAt = max over all fragments' markedForDeleteAt;
   *  - last-writer-wins per column name (strictly-greater timestamp
@@ -30,6 +33,9 @@ final case class CompactedRow(key: Array[Byte], deletedAt: Long, columns: Seq[Ce
   *  - after the row: purge columns with ts <= deletedAt (`:183-191`);
   *  - rows left with zero columns are preserved (empty-row markers);
   *  - maxRowSize stops accumulation (F3, `:89-96`).
+  *
+  * Names are ordered by `nameType.sortKey` (the order the shuffle
+  * sorted them in), compared as unsigned bytes.
   */
 object Compaction {
 
@@ -64,8 +70,10 @@ object Compaction {
         val source = it.head.source
         var deletedAt = Long.MinValue
         val columns = new ArrayBuffer[CellOut]()
-        val openTombstones = new ArrayBuffer[(Array[Byte], Array[Byte], Long)]() // (min, max, mfda)
+        // (min, max, mfda), bounds as sort keys
+        val openTombstones = new ArrayBuffer[(Array[Byte], Array[Byte], Long)]()
         var curr: CellOut = null
+        var currKey: Array[Byte] = null // sort key of curr's name
         var totalSize = 0L
         var truncated = false
 
@@ -79,37 +87,38 @@ object Compaction {
               truncated = true // F3: stop accumulating, keep draining for deletedAt
             } else if (a.kind == SSTableFormat.KindRangeTombstone) {
               val mfda = a.ts.get
+              val min = nameType.sortKey(a.name)
+              val max = nameType.sortKey(a.rtMax)
               // an older cell named exactly at the lower bound sorts
               // BEFORE the tombstone (name, then ts): it is still pending
               if (curr != null && mfda >= curr.ts &&
-                  nameType.compare(a.name, curr.name) <= 0 &&
-                  nameType.compare(curr.name, a.rtMax) <= 0) curr = null
-              openTombstones += ((a.name, a.rtMax, mfda))
+                  compareUnsigned(min, currKey) <= 0 && compareUnsigned(currKey, max) <= 0) curr = null
+              openTombstones += ((min, max, mfda))
             } else {
+              val nameKey = nameType.sortKey(a.name)
               // expire tombstones that end before this column's name
               var i = 0
               while (i < openTombstones.length) {
-                if (nameType.compare(openTombstones(i)._2, a.name) < 0) {
+                if (compareUnsigned(openTombstones(i)._2, nameKey) < 0) {
                   openTombstones.remove(i)
                 } else i += 1
               }
               val ts = a.ts.get
               val deletedByRt = openTombstones.exists { case (min, max, mfda) =>
-                nameType.compare(min, a.name) <= 0 && nameType.compare(a.name, max) <= 0 &&
-                  mfda >= ts
+                compareUnsigned(min, nameKey) <= 0 && compareUnsigned(nameKey, max) <= 0 && mfda >= ts
               }
               if (!deletedByRt) {
                 val cell = CellOut(a.kind, a.name, a.value, ts, a.ttl, a.localDeletionTime, a.tsOfLastDelete)
-                if (curr == null) curr = cell
-                // COMPARATOR equality, not byte equality: typed
-                // comparators can equate byte-distinct encodings
-                // (e.g. Decimal 2.5 vs 2.50, non-minimal varints) and
-                // those must collapse to one LWW winner
-                else if (nameType.compare(curr.name, cell.name) == 0) {
+                // sort-key equality, not byte equality: typed orders
+                // equate byte-distinct encodings (e.g. Decimal 2.5 vs
+                // 2.50, non-minimal varints) and those must collapse to
+                // one LWW winner
+                if (curr != null && compareUnsigned(currKey, nameKey) == 0) {
                   if (cell.ts > curr.ts) curr = cell // LWW, first wins ties
                 } else {
-                  columns += curr
+                  if (curr != null) columns += curr
                   curr = cell
+                  currKey = nameKey
                 }
               }
             }

@@ -37,7 +37,7 @@ object StreamingCompaction {
     * row markers first), then ts. */
   private val ShuffleOrder: Ordering[(Option[Array[Byte]], Option[Long])] =
     Ordering.Tuple2(
-      Ordering.Option(Ordering.fromLessThan[Array[Byte]](CassType.unsignedCompare(_, _) < 0)),
+      Ordering.Option(Ordering.fromLessThan[Array[Byte]](java.util.Arrays.compareUnsigned(_, _) < 0)),
       Ordering.Option(Ordering.Long))
 
   /** atom identity by content (byte arrays compared by value). */

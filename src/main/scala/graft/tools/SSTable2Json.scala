@@ -10,13 +10,14 @@ import graft.GraftSSTable
   * Usage: SSTable2Json <inputDir> <outputDir> [blocksize] [maxCorrupt]
   *          [sstable:<ver>] [cqlfile:<path>] [schemafile:<path>]
   *          [columntype:<marshal>] [keytype:<marshal>]
-  *          [compress | compress:snappy | compress:deflate] [avro]
+  *          [compress | compress:lz4 | compress:snappy | compress:deflate] [avro]
   *
   * `schemafile:`/`columntype:`/`keytype:` configure the marshal types
   * (the reference's `-cql`/`aegisthus.columntype`/`keytype` options):
   * the comparator drives the distributed sort+merge and the rendered
   * aeg-JSON names. `compress` writes chunked-LZ4 sstables
-  * (`compress:snappy`/`compress:deflate` pick those codecs); `avro`
+  * (`compress:snappy`/`compress:deflate` pick those codecs, any other
+  * codec name is refused before the session starts); `avro`
   * writes the `cqlfile:` pivot as Avro instead of parquet. The session
   * is [[graft.GraftSession]]'s: `SPARK_MASTER` and `SPARK_GRAFT_CPUS`. */
 object SSTable2Json {
@@ -24,7 +25,7 @@ object SSTable2Json {
     require(args.length >= 2,
       "usage: SSTable2Json <inputDir> <outputDir> [blocksize] [maxCorrupt] [sstable:<ver>] " +
         "[cqlfile:<path>] [schemafile:<path>] [columntype:<marshal>] [keytype:<marshal>] " +
-        "[compress | compress:snappy | compress:deflate] [avro]")
+        "[compress | compress:lz4 | compress:snappy | compress:deflate] [avro]")
     val input = args(0)
     val output = args(1)
     // digit-gated like maxCorrupt: a colon-free flag word (`compress`)
@@ -38,15 +39,15 @@ object SSTable2Json {
     // CQL pivot export (reference org.coursera.SSTableExport analog,
     // but columnar parquet instead of Avro): cqlfile:<path to CREATE TABLE>
     val cqlFile = opt("cqlfile")
-    // `compress` = chunked LZ4; `compress:snappy` / `compress:deflate`
-    // select the other Cassandra codecs
+    // `compress` = chunked LZ4; `compress:<codec>` selects a Cassandra codec
     val compressArg = args.find(a => a == "compress" || a.startsWith("compress:"))
     val compress = compressArg.isDefined
-    val codec = compressArg.filter(_.contains(":")).map(_.split(":")(1).toLowerCase match {
-      case "snappy" => "SnappyCompressor"
-      case "deflate" => "DeflateCompressor"
-      case _ => "LZ4Compressor"
-    }).getOrElse("LZ4Compressor")
+    val codecs = Map("lz4" -> "LZ4Compressor", "snappy" -> "SnappyCompressor",
+      "deflate" -> "DeflateCompressor")
+    val codec = opt("compress").map { c =>
+      codecs.getOrElse(c.toLowerCase, throw new IllegalArgumentException(
+        s"unknown codec '$c' in compress:$c: expected one of lz4, snappy, deflate"))
+    }.getOrElse("LZ4Compressor")
 
     val spark = graft.GraftSession("sstable2json")
     try {

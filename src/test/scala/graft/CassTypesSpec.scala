@@ -3,10 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sstable.CassType
 
-/** Marshal-type system (X1/X2): parse, render, compare — incl. the
-  * newly covered Boolean/Float/Double and time-ordered TimeUUID. */
+/** Marshal-type system (X1/X2): parse, render, order (by sort key) —
+  * incl. the newly covered Boolean/Float/Double and time-ordered
+  * TimeUUID. */
 class CassTypesSpec extends AnyFunSuite {
   private def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+  private def keyOrder(t: CassType, x: Array[Byte], y: Array[Byte]): Int =
+    java.util.Arrays.compareUnsigned(t.sortKey(x), t.sortKey(y))
 
   test("parse handles the full SURVEY X2 subset") {
     Seq("BytesType", "UTF8Type", "AsciiType", "LongType", "Int32Type",
@@ -40,13 +43,13 @@ class CassTypesSpec extends AnyFunSuite {
     val earlier = v1(0xffffffff, 0x0001, 0x001) // huge time_low, small time_mid/hi
     val later = v1(0x00000001, 0x0002, 0x001)   // small time_low, bigger time_mid
     val t = CassType.parse("TimeUUIDType")
-    assert(t.compare(earlier, later) < 0, "time order must win")
-    assert(CassType.unsignedCompare(earlier, later) > 0, "byte order disagrees by construction")
+    assert(keyOrder(t, earlier, later) < 0, "time order must win")
+    assert(java.util.Arrays.compareUnsigned(earlier, later) > 0, "byte order disagrees by construction")
   }
 
   test("ReversedType flips ordering; Composite compares per component") {
     val rev = CassType.parse("ReversedType(Int32Type)")
-    assert(rev.compare(b(0, 0, 0, 1), b(0, 0, 0, 2)) > 0)
+    assert(keyOrder(rev, b(0, 0, 0, 1), b(0, 0, 0, 2)) > 0)
     val comp = CassType.parse("CompositeType(Int32Type, UTF8Type)").asInstanceOf[CassType.CompositeType]
     def enc(i: Int, s: String): Array[Byte] = {
       val sb = s.getBytes
@@ -54,8 +57,8 @@ class CassTypesSpec extends AnyFunSuite {
       bb.putShort(4).putInt(i).put(0.toByte).putShort(sb.length.toShort).put(sb).put(0.toByte)
       bb.array()
     }
-    assert(comp.compare(enc(1, "zzz"), enc(2, "aaa")) < 0)
-    assert(comp.compare(enc(2, "aaa"), enc(2, "abc")) < 0)
+    assert(keyOrder(comp, enc(1, "zzz"), enc(2, "aaa")) < 0)
+    assert(keyOrder(comp, enc(2, "aaa"), enc(2, "abc")) < 0)
   }
 
   test("collection types round-trip through typeName and render hex") {

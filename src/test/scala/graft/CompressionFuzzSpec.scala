@@ -9,7 +9,8 @@ import graft.sstable._
 /** Robustness coverage the golden fixtures don't reach:
   *  - Snappy and Deflate chunk decompression (fixtures are LZ4-only);
   *  - scanner fuzzing: random garbage behind skipCorrupt must never
-  *    kill a scan, only count the file.
+  *    kill a scan, only count the file;
+  *  - the CLI refuses a codec it cannot write.
   */
 class CompressionFuzzSpec extends AnyFunSuite {
 
@@ -97,5 +98,13 @@ class CompressionFuzzSpec extends AnyFunSuite {
     // a fuzzed file can parse as garbage rows by chance, but the scan
     // itself must complete; corrupt counter is bounded by file count
     assert(SSTableSource.corruptFiles.get.value <= 10)
+  }
+
+  test("SSTable2Json refuses an unknown codec before the session starts, naming the ones it writes") {
+    Seq("compress:zstd", "compress:", "compress:lz4hc").foreach { flag =>
+      val e = intercept[IllegalArgumentException](graft.tools.SSTable2Json.main(
+        Array("/nonexistent-sstables", "/nonexistent-out", "sstable:jb", flag)))
+      Seq("lz4", "snappy", "deflate").foreach(c => assert(e.getMessage.contains(c), e.getMessage))
+    }
   }
 }

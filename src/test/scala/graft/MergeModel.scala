@@ -5,7 +5,8 @@ import graft.streaming.StreamingCompaction
 
 /** A naive, order-free model of Cassandra's merge rules for one row
   * key, stated independently of [[graft.sstable.Compaction]]: no sort,
-  * no sweep, no state.
+  * no sweep, no state, and names ordered by the test-side
+  * [[TypedOrder]], not by the sort keys the merge compares.
   *
   *  - `deletedAt` is the max row-deletion marker over all atoms;
   *  - a cell dies if some range tombstone covers its name by the
@@ -29,11 +30,12 @@ object MergeModel {
     val cells = atoms.filter(a => a.kind != SSTableFormat.KindRangeTombstone &&
       a.kind != SSTableFormat.KindEmptyRow)
     def shadowed(c: AtomRec): Boolean = rts.exists { rt =>
-      ct.compare(rt.name, c.name) <= 0 && ct.compare(c.name, rt.rtMax) <= 0 && rt.ts.get >= c.ts.get
+      TypedOrder.compare(ct, rt.name, c.name) <= 0 && TypedOrder.compare(ct, c.name, rt.rtMax) <= 0 &&
+        rt.ts.get >= c.ts.get
     }
     // comparator-equal names form one class
     val classes = cells.foldLeft(List.empty[List[AtomRec]]) { (acc, c) =>
-      acc.find(cls => ct.compare(cls.head.name, c.name) == 0) match {
+      acc.find(cls => TypedOrder.compare(ct, cls.head.name, c.name) == 0) match {
         case Some(cls) => (c :: cls) :: acc.filterNot(_ eq cls)
         case None => List(c) :: acc
       }

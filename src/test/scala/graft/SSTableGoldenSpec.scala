@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sstable.CassType
 
 /** End-to-end golden-file equivalence against the reference's own
   * integration corpus (SURVEY §5 pillar 1): scan → compact → aeg-JSON
@@ -28,7 +27,7 @@ class SSTableGoldenSpec extends AnyFunSuite {
     val compacted = GraftSSTable.compact(atoms, numPartitions = 4)
     val lines = GraftSSTable.aegJsonLines(compacted).collect()
     GraftSSTable.assertCorruptFilesBelow(1)
-    lines.sortWith((a, b) => CassType.unsignedCompare(a._1, b._1) < 0).map(_._2).toSeq
+    lines.sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0).map(_._2).toSeq
   }
 
   private val cases = Seq(

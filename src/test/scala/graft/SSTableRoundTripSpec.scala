@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sstable.CassType
 
 /** Write-path correctness proven via the read path (reference
   * round-trip test, AegisthusIntegrationTest.groovy:198-227): compact
@@ -38,7 +37,7 @@ class SSTableRoundTripSpec extends AnyFunSuite {
       val atoms2 = GraftSSTable.readAtoms(spark, tmp)
       val compacted2 = GraftSSTable.compact(atoms2, numPartitions = 4)
       val actual = GraftSSTable.aegJsonLines(compacted2).collect()
-        .sortWith((a, b) => CassType.unsignedCompare(a._1, b._1) < 0).map(_._2).toSeq
+        .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0).map(_._2).toSeq
       val expected = goldenLines(caseDir)
       assert(actual.size == expected.size)
       actual.zip(expected).foreach { case (a, e) => assert(a == e) }
@@ -68,7 +67,7 @@ class SSTableRoundTripSpec extends AnyFunSuite {
       Map("skipCorrupt" -> "true"))
     val runs = Seq(1, 4, 13).map { n =>
       GraftSSTable.aegJsonLines(GraftSSTable.compact(atoms, numPartitions = n)).collect()
-        .sortWith((a, b) => CassType.unsignedCompare(a._1, b._1) < 0).map(_._2).toSeq
+        .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0).map(_._2).toSeq
     }
     assert(runs(0) == goldenLines(caseDir))
     assert(runs.distinct.size == 1, "parallelism must never change results")
@@ -99,7 +98,7 @@ class SSTableRoundTripSpec extends AnyFunSuite {
     val atoms2 = GraftSSTable.readAtoms(spark, tmp)
     val compacted2 = GraftSSTable.compact(atoms2, numPartitions = 4)
     val actual = GraftSSTable.aegJsonLines(compacted2).collect()
-      .sortWith((a, b) => CassType.unsignedCompare(a._1, b._1) < 0).map(_._2).toSeq
+      .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0).map(_._2).toSeq
     val expected = goldenLines(caseDir)
     assert(actual.size == expected.size)
     actual.zip(expected).foreach { case (a, e) => assert(a == e) }
@@ -117,7 +116,7 @@ class SSTableRoundTripSpec extends AnyFunSuite {
         compress = true, chunkLength = 1024, codec = codec)
       val compacted2 = GraftSSTable.compact(GraftSSTable.readAtoms(spark, tmp), numPartitions = 4)
       val actual = GraftSSTable.aegJsonLines(compacted2).collect()
-        .sortWith((a, b) => CassType.unsignedCompare(a._1, b._1) < 0).map(_._2).toSeq
+        .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0).map(_._2).toSeq
       assert(actual == expected, s"$codec round-trip must reproduce the golden lines")
     }
   }

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The SSTable core states each decision once: one micro-batch stream
   * serves both file-set sources, only [[graft.sstable.TaskCommit]]
   * (plus distcp's per-file copy commit) makes a written file visible,
-  * only [[graft.sstable.Compaction]] applies the merge rules, and only
-  * [[graft.sstable.CassType]] types and decodes a value. */
+  * only [[graft.sstable.Compaction]] applies the merge rules, only
+  * [[graft.sstable.CassType]] types and decodes a value, and only
+  * `CassType.sortKey` states a type's order. */
 class StatedOnceSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -56,5 +57,15 @@ class StatedOnceSpec extends AnyFunSuite {
     val split = raw"(','.*depth\s*==\s*0|depth\s*==\s*0.*',')".r
     val found = mainSources.flatMap { case (f, text) => split.findAllIn(text).map(_ => f) }
     assert(found == Seq("scala/graft/sstable/CassTypes.scala"), s"splitters: $found")
+  }
+
+  test("a type's order is stated only by CassType.sortKey: no byte-array compare in src/main") {
+    // a second statement of the order (a typed compare beside the sort
+    // key) can drift from the order the shuffle sorted in
+    val compare = raw"def\s+compare\s*\(\s*\w+\s*:\s*Array\[Byte\]".r
+    val found = mainSources.collect {
+      case (f, text) if compare.findFirstIn(text).isDefined || text.contains("unsignedCompare") => f
+    }
+    assert(found.isEmpty, s"a second byte-array order in $found")
   }
 }

@@ -13,10 +13,11 @@ import graft.sstable._
   * coverage and wrong LWW adjacency.
   *
   * Two layers of proof:
-  *  1. a property check that [[CassType.sortKey]]'s binary encoding
-  *     agrees in sign with [[CassType.compare]] for every type pair in
-  *     a pool of adversarial values (prefixes, zeros, sign flips,
-  *     NaN/infinities, byte-vs-time order divergence);
+  *  1. a property check that [[CassType.sortKey]]'s binary encoding,
+  *     the only statement of a type's order, agrees in sign with the
+  *     test-side [[TypedOrder]] oracle for every pair in a pool of
+  *     adversarial values (prefixes, zeros, sign flips, NaN/infinities,
+  *     byte-vs-time order divergence);
   *  2. distributed `GraftSSTable.compact` runs over LongType and
   *     CompositeType(TimeUUIDType) names — written through the real
   *     [[SSTableWriter]] → DSv2 scan path — asserting the merged
@@ -53,15 +54,19 @@ class TypedComparatorSpec extends AnyFunSuite {
     bb.array()
   }
 
+  /** the order the merge and the shuffle use: sort keys as unsigned bytes */
+  private def keyOrder(t: CassType, a: Array[Byte], b: Array[Byte]): Int =
+    java.util.Arrays.compareUnsigned(t.sortKey(a), t.sortKey(b))
+
   private def assertAgreement(t: CassType, pool: Seq[Array[Byte]], label: String): Unit =
     for (a <- pool; b <- pool) {
-      val viaCompare = Integer.signum(t.compare(a, b))
-      val viaKey = Integer.signum(CassType.unsignedCompare(t.sortKey(a), t.sortKey(b)))
-      assert(viaCompare == viaKey,
-        s"$label: sortKey order disagrees with compare for ${CassType.hex(a)} vs ${CassType.hex(b)}")
+      val viaOracle = Integer.signum(TypedOrder.compare(t, a, b))
+      val viaKey = Integer.signum(keyOrder(t, a, b))
+      assert(viaOracle == viaKey,
+        s"$label: sortKey order disagrees with TypedOrder for ${CassType.hex(a)} vs ${CassType.hex(b)}")
     }
 
-  test("sortKey agrees with compare for every marshal type (property pool)") {
+  test("sortKey agrees with the TypedOrder oracle for every marshal type (property pool)") {
     val rnd = new scala.util.Random(42)
     val longs = Seq(Long.MinValue, -1L, 0L, 1L, 255L, Long.MaxValue) ++
       Seq.fill(20)(rnd.nextLong())
@@ -105,8 +110,8 @@ class TypedComparatorSpec extends AnyFunSuite {
     val staticVals = Seq(staticName(""), staticName("s"), staticName("t"), Array.emptyByteArray)
     assertAgreement(comp, compVals ++ staticVals, "Composite(Int32,UTF8) with static names")
     staticVals.init.foreach { st =>
-      assert(comp.compare(Array.emptyByteArray, st) < 0)
-      compVals.foreach(v => assert(comp.compare(st, v) < 0 && comp.compare(v, st) > 0))
+      assert(keyOrder(comp, Array.emptyByteArray, st) < 0)
+      compVals.foreach(v => assert(keyOrder(comp, st, v) < 0 && keyOrder(comp, v, st) > 0))
     }
     val reversed = CassType.CompositeType(Seq(CassType.ReversedType(CassType.LongType), CassType.UTF8Type))
     assertAgreement(reversed, Seq(longB(-1L), longB(0L), longB(7L)).map(composite(_, "v".getBytes)) ++
@@ -146,10 +151,10 @@ class TypedComparatorSpec extends AnyFunSuite {
     def a(name: Array[Byte], v: String, ts: Long) =
       AtomRec("k".getBytes, "src", Long.MinValue, SSTableFormat.KindColumn,
         name, v.getBytes, Some(ts), None, None, None, null)
-    // 2.5 (scale 1) and 2.50 (scale 2): different bytes, compare == 0
+    // 2.5 (scale 1) and 2.50 (scale 2): different bytes, one sort key
     val n1 = decB("25", 1)
     val n2 = decB("250", 2)
-    assert(CassType.DecimalType.compare(n1, n2) == 0 && !java.util.Arrays.equals(n1, n2))
+    assert(keyOrder(CassType.DecimalType, n1, n2) == 0 && !java.util.Arrays.equals(n1, n2))
     val merged = Compaction.merge(
       Iterator(a(n1, "old", 10L), a(n2, "new", 20L)), CassType.DecimalType).toList
     assert(merged.head.columns.map(c => new String(c.value)) == Seq("new"),
