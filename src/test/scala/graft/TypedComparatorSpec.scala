@@ -66,7 +66,7 @@ class TypedComparatorSpec extends AnyFunSuite {
         s"$label: sortKey order disagrees with TypedOrder for ${CassType.hex(a)} vs ${CassType.hex(b)}")
     }
 
-  test("sortKey agrees with the TypedOrder oracle for every marshal type (property pool)") {
+  test("sortKey agrees with TypedOrder for every marshal type (property pool)") {
     val rnd = new scala.util.Random(42)
     val longs = Seq(Long.MinValue, -1L, 0L, 1L, 255L, Long.MaxValue) ++
       Seq.fill(20)(rnd.nextLong())
